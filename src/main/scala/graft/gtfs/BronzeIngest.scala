@@ -104,6 +104,11 @@ object BronzeIngest {
     path
   }
 
+  /** The codec of every bronze and silver parquet file: zstd stores
+    * the warehouse in fewer bytes than Spark's default, snappy.
+    */
+  val parquetCodec = "zstd"
+
   /** Stamp the audit column and append to a bronze parquet table
     * (K3/D3). Partitioned by the DATE of insert_date: silver's
     * incremental filter (P5) then reads only new partitions.
@@ -112,6 +117,7 @@ object BronzeIngest {
     df.withColumn(Schemas.insertDateCol, insertDateLit(ingestTs))
       .withColumn("insert_day", to_date(col(Schemas.insertDateCol)))
       .write.mode("append")
+      .option("compression", parquetCodec)
       .partitionBy("insert_day")
       .parquet(tablePath)
 
@@ -158,7 +164,8 @@ object BronzeIngest {
     * Shared by the batch path (loadRt) and the streaming foreachBatch
     * (RtStream) so neither re-reads the source nor re-decodes.
     * Returns the number of corrupt (undecodable) snapshots in the
-    * batch — tolerated, counted, logged.
+    * batch — tolerated, counted, logged. The count is an
+    * `Observation` riding the first write, not a job of its own.
     */
   def ingestTripUpdateBlobs(blobs: org.apache.spark.sql.Dataset[Array[Byte]],
                             warehouseDir: String, ingestTs: LocalDateTime): Long = {
@@ -166,9 +173,11 @@ object BronzeIngest {
     val parsed = RtDecode.decodePairs(blobs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      appendBronze(parsed.flatMap(_._2).toDF(), s"$warehouseDir/bronze/trip_updates_raw", ingestTs)
+      val bad = org.apache.spark.sql.Observation()
+      val headers = parsed.observe(bad, count(when(!col("_1"), 1)).as("corrupt")).flatMap(_._2)
+      appendBronze(headers.toDF(), s"$warehouseDir/bronze/trip_updates_raw", ingestTs)
       appendBronze(parsed.flatMap(_._3).toDF(), s"$warehouseDir/bronze/trip_stop_times", ingestTs)
-      val corrupt = parsed.filter(!_._1).count()
+      val corrupt = bad.get("corrupt").asInstanceOf[Long]
       if (corrupt > 0)
         System.err.println(s"[bronze] $corrupt corrupt TripUpdates snapshot(s) skipped")
       corrupt

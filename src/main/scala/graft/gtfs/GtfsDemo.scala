@@ -48,8 +48,10 @@ object GtfsDemo {
     println(s"silver appended (RT pass, static already at watermark): $afterRt")
 
     def silver(n: String) = SilverTransforms.readSilver(spark, wh, n)
+    val t0 = System.nanoTime()
     val spine = Kpi.delaySpine(
       silver("trip_stop_times_silver"), silver("stop_times_static_silver"), serviceDate)
+    println(f"delay spine built once for every panel in ${(System.nanoTime() - t0) / 1e9}%.2f s")
 
     val kpis: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
       "avg delay over time" -> Kpi.avgDelayOverTime(spine),

@@ -1,7 +1,7 @@
 package graft.gtfs
 
 import java.time.{LocalDate, ZoneId}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GtfsTime.gtfsTimeToSeconds
@@ -15,10 +15,17 @@ import graft.functions.GtfsTime.gtfsTimeToSeconds
   * parsed by the native GtfsTimeToSeconds expression) anchored to the
   * service date's Paris midnight. Join spine: (trip_id, stop_sequence).
   *
-  * Scale design: dimension tables (routes ~100 rows, stops ~3k,
-  * trips ~50k) are deduped to their latest snapshot then broadcast;
-  * the only shuffle joins are fact×fact. All aggregations are
-  * partial+final; top-k is TakeOrderedAndProject, not a full sort.
+  * Scale design: one dashboard refresh builds the spine once.
+  * [[delaySpine]] dedups the schedule to its latest snapshot, joins
+  * the observations to it, materializes the result with a local
+  * checkpoint (counting its rows on the way) and coalesces it to the
+  * partitions its measured size needs: one for an hour of a live
+  * feed. Every panel then reads the materialized spine, and a panel
+  * over a one-partition spine plans no Exchange at all. Dimensions
+  * (routes ~100 rows, stops ~3k, trips ~50k) and vehicle positions
+  * are sized the same way from their scan's size estimate before
+  * their latest-snapshot window, so that window shuffles nothing.
+  * Top-k is TakeOrderedAndProject, not a full sort.
   */
 object Kpi {
 
@@ -31,21 +38,60 @@ object Kpi {
   def latestDim(dim: DataFrame, keys: String*): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(Schemas.insertDateCol).desc)
-    dim.withColumn("__rn", row_number().over(w))
+    sizedByEstimate(dim).withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** Partitions for `bytes` of rows: one per
+    * `spark.sql.files.maxPartitionBytes`, at least one.
+    */
+  private def partitionsFor(spark: SparkSession, bytes: BigInt): Int = {
+    val perPartition = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
+    ((bytes + perPartition - 1) / perPartition).max(1).min(Int.MaxValue).toInt
+  }
+
+  /** A batch input coalesced to the partitions its scan's size
+    * estimate needs. On one partition a window over it needs no
+    * Exchange. A streaming input is returned as it is.
+    */
+  private def sizedByEstimate(df: DataFrame): DataFrame =
+    if (df.isStreaming) df
+    else df.coalesce(partitionsFor(df.sparkSession, df.queryExecution.optimizedPlan.stats.sizeInBytes))
+
+  /** Materializes a batch result once and coalesces it to the
+    * partitions its measured size needs. The row count comes from an
+    * `Observation` on the checkpoint's own job. The size is measured,
+    * not estimated: the optimizer estimates a join as the product of
+    * its inputs, which never reads as small. The coalesce comes after
+    * the checkpoint, because a checkpointed relation reports unknown
+    * partitioning even when it has one partition.
+    */
+  private def materialized(df: DataFrame): DataFrame = {
+    val rows = Observation()
+    val done = df.observe(rows, count(lit(1)).as("rows")).localCheckpoint()
+    val rowBytes = 8L + df.schema.defaultSize // the planner's row-width rule
+    done.coalesce(partitionsFor(df.sparkSession,
+      BigInt(rows.get("rows").asInstanceOf[Long]) * rowBytes))
+  }
+
   /** The join spine: observed×scheduled with integral delay seconds
-    * (SURVEY §7.4 hazard 7: round to whole seconds).
+    * (SURVEY §7.4 hazard 7: round to whole seconds). The schedule is
+    * silver's append-only history, so it is deduped to its latest
+    * snapshot per (trip_id, stop_sequence) first: a second daily
+    * static load must not double every KPI count.
+    *
+    * On a batch input the spine is computed here, once, and every
+    * panel reads the result (see "Scale design" above). On a streaming
+    * input it stays a lazy plan, a stream-static join.
     */
   def delaySpine(observed: DataFrame, scheduled: DataFrame,
                  serviceDate: LocalDate): DataFrame = {
     val dayStartEpoch = serviceDate.atStartOfDay(paris).toEpochSecond
-    val sched = scheduled
+    val sched = latestDim(scheduled, "trip_id", "stop_sequence")
       .withColumn("sched_s", gtfsTimeToSeconds(col("intermediate_stop")))
       .select(col("trip_id"), col("stop_sequence").cast("long").as("stop_sequence"),
         col("stop_id").as("sched_stop_id"), col("sched_s"))
-    observed
+    val spine = observed
       .filter(col("intermediate_stop").isNotNull)
       .select(col("trip_id"), col("stop_sequence"), col("stop_id"),
         col("intermediate_stop").as("obs_epoch"))
@@ -53,6 +99,7 @@ object Kpi {
       .withColumn("sched_epoch", lit(dayStartEpoch) + col("sched_s"))
       .withColumn("delay_s", (col("obs_epoch") - col("sched_epoch")).cast("long"))
       .withColumn("obs_ts", to_timestamp(col("obs_epoch")))
+    if (spine.isStreaming) spine else materialized(spine)
   }
 
   /** README.md:120 — retard moyen dans le temps (15-minute buckets). */
@@ -206,8 +253,7 @@ object Kpi {
   def latestVehiclePositions(vehiclePositions: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("vehicle_id"))
       .orderBy(col("timestamp_epoch").desc, col(Schemas.insertDateCol).desc)
-    vehiclePositions
-      .filter(col("vehicle_id").isNotNull)
+    sizedByEstimate(vehiclePositions.filter(col("vehicle_id").isNotNull))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
       .orderBy(col("vehicle_id"))
@@ -215,7 +261,8 @@ object Kpi {
 
   /** README.md:128 — carte des arrêts avec état de service: left join
     * stops × observations; never-observed stops (left anti semantics)
-    * surface as 'no data' (README.md:138).
+    * surface as 'no data' (README.md:138). The per-stop rollup holds at
+    * most one row per stop, so it is broadcast: neither side shuffles.
     */
   def stopsServiceState(spine: DataFrame, stops: DataFrame): DataFrame = {
     val stopDim = latestDim(stops, "stop_id")
@@ -223,7 +270,7 @@ object Kpi {
     val observed = spine.groupBy(col("stop_id"))
       .agg(count(lit(1)).as("n_obs"), avg(col("delay_s")).as("avg_delay_s"),
         max(col("obs_epoch")).as("last_obs_epoch"))
-    stopDim.join(observed, Seq("stop_id"), "left")
+    stopDim.join(broadcast(observed), Seq("stop_id"), "left")
       .withColumn("service_state",
         when(col("n_obs").isNull, lit("no data")).otherwise(lit("active")))
       .withColumn("n_obs", coalesce(col("n_obs"), lit(0L)))

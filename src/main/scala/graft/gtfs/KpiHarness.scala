@@ -80,6 +80,7 @@ object KpiHarness {
     * string [[Kpi.delaySpine]] parses natively — the spine's sched_s
     * must round-trip back to the integer the oracle computes
     * arithmetically, so a GtfsTimeToSeconds regression breaks the hash.
+    * One static load, stamped like the silver table's `insert_date`.
     */
   def scheduledFixture(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -93,7 +94,8 @@ object KpiHarness {
         format_string("%d:%02d:%02d",
           (schedS($"tn", $"seq") / 3600L).cast("int"),
           (schedS($"tn", $"seq") % 3600L / 60L).cast("int"),
-          (schedS($"tn", $"seq") % 60L).cast("int")).as("intermediate_stop"))
+          (schedS($"tn", $"seq") % 60L).cast("int")).as("intermediate_stop"),
+        currentBatch.as(Schemas.insertDateCol))
   }
 
   private val staleBatch = lit("2024-03-14 06:00:00").cast("timestamp")

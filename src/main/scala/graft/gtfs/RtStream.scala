@@ -126,6 +126,7 @@ object RtStream {
       .withColumn("insert_day", to_date(col(Schemas.insertDateCol)))
       .writeStream
       .format("parquet")
+      .option("compression", BronzeIngest.parquetCodec)
       .option("path", s"$warehouseDir/silver/$silverName")
       .option("checkpointLocation", checkpointDir)
       .partitionBy("insert_day")

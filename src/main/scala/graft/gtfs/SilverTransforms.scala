@@ -140,7 +140,8 @@ object SilverTransforms {
     val obs = org.apache.spark.sql.Observation()
     val out = fresh.observe(obs, count(lit(1)).as("appended"))
       .withColumn("insert_day", to_date(col(Schemas.insertDateCol)))
-    out.write.mode("append").partitionBy("insert_day").parquet(silverPath)
+    out.write.mode("append").option("compression", BronzeIngest.parquetCodec)
+      .partitionBy("insert_day").parquet(silverPath)
     obs.get("appended").asInstanceOf[Long]
   }
 

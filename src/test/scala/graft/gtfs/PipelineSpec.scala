@@ -21,9 +21,12 @@ class PipelineSpec extends AnyFunSuite {
   private val ts2 = LocalDateTime.of(2025, 9, 3, 9, 30, 0) // RT load stamp
 
   /** Build a fully-loaded warehouse; `refreshBetween` = refresh silver
-    * after the static load too (the incremental path).
+    * after the static load too (the incremental path);
+    * `nextDayStatic` = then run the next day's static load and refresh
+    * again, as the reference's daily DAG does.
     */
-  private def buildWarehouse(refreshBetween: Boolean): (String, Map[String, Long], Map[String, Long]) = {
+  private def buildWarehouse(refreshBetween: Boolean, nextDayStatic: Boolean = false)
+      : (String, Map[String, Long], Map[String, Long]) = {
     val root = TestSpark.tempDir("gtfs_pipeline")
     val src = s"$root/static_src"
     val tuDir = s"$root/rt/tu"
@@ -44,6 +47,10 @@ class PipelineSpec extends AnyFunSuite {
       if (refreshBetween) SilverTransforms.refreshAll(spark, wh) else Map.empty[String, Long]
     BronzeIngest.loadRt(spark, tuDir, vpDir, wh, ts2)
     val secondCounts = SilverTransforms.refreshAll(spark, wh)
+    if (nextDayStatic) {
+      BronzeIngest.loadStatic(spark, src, wh, ts1.plusDays(1))
+      SilverTransforms.refreshAll(spark, wh)
+    }
     (wh, firstCounts, secondCounts)
   }
 
@@ -141,6 +148,52 @@ class PipelineSpec extends AnyFunSuite {
     assert(Kpi.avgDelayOverTime(spine).agg(sum("n_obs")).collect().head.getLong(0) == 5L)
     assert(Kpi.delayHeatmap(spine).agg(sum("n_obs")).collect().head.getLong(0) == 5L)
     assert(Kpi.delayEvolutionPerStop(spine).agg(sum("n_obs")).collect().head.getLong(0) == 5L)
+  }
+
+  test("a second daily static load leaves every KPI count unchanged") {
+    val (whTwice, _, _) = buildWarehouse(refreshBetween = true, nextDayStatic = true)
+    def silverTwice(name: String) = SilverTransforms.readSilver(spark, whTwice, name)
+    assert(silverTwice("stop_times_static_silver").count() == 12) // two daily copies
+    val spineTwice = Kpi.delaySpine(silverTwice("trip_stop_times_silver"),
+      silverTwice("stop_times_static_silver"), serviceDate)
+    assert(Kpi.punctualityRate(spineTwice).collect().head.getLong(1) == 5L)
+    assert(spineTwice.select("trip_id", "stop_sequence", "delay_s").collect().map(_.toString).sorted
+      .sameElements(spine.select("trip_id", "stop_sequence", "delay_s").collect().map(_.toString).sorted))
+    val topRoutes = Kpi.topDelayedRoutes(spineTwice,
+      silverTwice("trips_static_silver"), silverTwice("routes_static_silver")).collect()
+    assert(topRoutes.map(r => r.getString(0) -> r.getLong(2)).toSeq == Seq("R2" -> 1L, "R1" -> 4L))
+  }
+
+  test("an empty observation window builds an empty spine") {
+    val none = Kpi.delaySpine(silver("trip_stop_times_silver").filter(lit(false)),
+      silver("stop_times_static_silver"), serviceDate)
+    assert(none.count() == 0L)
+    assert(Kpi.punctualityRate(none).collect().head.getLong(1) == 0L)
+    val absent = SilverTransforms.readSilver(spark, TestSpark.tempDir("gtfs_empty"), "trip_stop_times_silver")
+    assert(Kpi.delaySpine(absent, silver("stop_times_static_silver"), serviceDate).count() == 0L)
+  }
+
+  test("spine-only panels read the built spine with no shuffle; a streaming spine stays lazy") {
+    val built = spine // built before the listener attaches: only the panels are measured
+    val stats = graft.Observability.attach(spark)
+    try {
+      // slidingAvgDelay is left out: its Expand reports unknown partitioning,
+      // so its aggregate shuffles whatever the spine's partitioning.
+      Seq(Kpi.avgDelayOverTime(built), Kpi.punctualityRate(built),
+        Kpi.punctualityOverTime(built), Kpi.delayHeatmap(built), Kpi.delayDistribution(built),
+        Kpi.travelTimeRealVsTheoretical(built), Kpi.delayEvolutionPerStop(built))
+        .foreach(_.collect())
+      val panels = stats.drain(spark)
+      assert(panels.size == 7 && panels.forall(_.shuffles == 0),
+        s"shuffles per panel: ${panels.map(_.shuffles)}")
+    } finally graft.Observability.remove(spark, stats)
+
+    val diskSchema = org.apache.spark.sql.types.StructType(
+      Schemas.silver("trip_stop_times_silver").fields :+
+        org.apache.spark.sql.types.StructField("insert_day", org.apache.spark.sql.types.DateType))
+    val observedStream = spark.readStream.schema(diskSchema)
+      .parquet(s"$wh/silver/trip_stop_times_silver")
+    assert(Kpi.delaySpine(observedStream, silver("stop_times_static_silver"), serviceDate).isStreaming)
   }
 
   test("D1/D2: warehouse registers as SQL-addressable catalog tables with pruning") {

@@ -19,11 +19,12 @@ class StreamingKpiSpec extends AnyFunSuite {
   private val dayStart = serviceDate
     .atStartOfDay(java.time.ZoneId.of("Europe/Paris")).toEpochSecond
 
-  // schedule: one trip, two stops, 09:00 and 09:10
+  // schedule: one trip, two stops, 09:00 and 09:10, one static load
   private def scheduled: DataFrame = {
     import spark.implicits._
-    Seq(("T1", 1L, "S1", "9:00:00"), ("T1", 2L, "S2", "9:10:00"))
-      .toDF("trip_id", "stop_sequence", "stop_id", "intermediate_stop")
+    val loaded = java.time.LocalDateTime.of(2025, 9, 3, 4, 0)
+    Seq(("T1", 1L, "S1", "9:00:00", loaded), ("T1", 2L, "S2", "9:10:00", loaded))
+      .toDF("trip_id", "stop_sequence", "stop_id", "intermediate_stop", Schemas.insertDateCol)
   }
 
   /** observed row: (stop_sequence, delay_s) → epoch at sched + delay. */
