@@ -13,7 +13,13 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Scale design: CSV parse is distributed and schema-driven (never
   * inferSchema — no extra pass over 100 TB), writes are append-only
   * parquet partitioned by ingest date so silver's watermark filter
-  * prunes partitions instead of scanning history.
+  * prunes partitions instead of scanning history. The independent
+  * writes of one load (the 4 static tables; the TripUpdates and
+  * VehiclePositions ingests) run at once on the one session
+  * ([[Batch.concurrently]]), and each write is coalesced to the
+  * partitions its size estimate needs ([[Batch.sizedByEstimate]]):
+  * one file per table for a small load, however many input splits it
+  * read.
   */
 object BronzeIngest {
 
@@ -111,11 +117,13 @@ object BronzeIngest {
 
   /** Stamp the audit column and append to a bronze parquet table
     * (K3/D3). Partitioned by the DATE of insert_date: silver's
-    * incremental filter (P5) then reads only new partitions.
+    * incremental filter (P5) then reads only new partitions. Sized by
+    * [[Batch.sizedByEstimate]] first, so a load is as many files as its
+    * size needs, not one per input split.
     */
   def appendBronze(df: DataFrame, tablePath: String, ingestTs: LocalDateTime): Unit =
-    df.withColumn(Schemas.insertDateCol, insertDateLit(ingestTs))
-      .withColumn("insert_day", to_date(col(Schemas.insertDateCol)))
+    Batch.sizedByEstimate(df.withColumn(Schemas.insertDateCol, insertDateLit(ingestTs))
+      .withColumn("insert_day", to_date(col(Schemas.insertDateCol))))
       .write.mode("append")
       .option("compression", parquetCodec)
       .partitionBy("insert_day")
@@ -152,7 +160,7 @@ object BronzeIngest {
     // File-presence precondition (P7, scripts/check_gtfs_static.py:4-6)
     val missing = files.values.filterNot(f => pathExists(spark, s"$srcDir/$f"))
     require(missing.isEmpty, s"missing GTFS files: ${missing.mkString(",")}")
-    files.foreach { case (table, file) =>
+    Batch.concurrently(files.toSeq) { case (table, file) =>
       val df = readCsv(spark, s"$srcDir/$file", Schemas.csvSchema(Schemas.bronze(table)))
       appendBronze(df, s"$warehouseDir/bronze/$table", ingestTs)
     }
@@ -184,16 +192,18 @@ object BronzeIngest {
     } finally parsed.unpersist()
   }
 
-  /** E2 bronze half: decode RT snapshot blobs → three bronze tables. */
+  /** E2 bronze half: decode RT snapshot blobs → three bronze tables.
+    * The TripUpdates and VehiclePositions ingests are independent and
+    * run at once, as the reference's two RT tasks do
+    * (gtfs_rt_minutely.py:351).
+    */
   def loadRt(spark: SparkSession, tripUpdatesDir: String, vehiclePositionsDir: String,
              warehouseDir: String, ingestTs: LocalDateTime = parisNow()): Unit = {
     import spark.implicits._
-    val tuBlobs = RtDecode.readFeedFiles(spark, tripUpdatesDir)
-      .select("content").as[Array[Byte]]
-    ingestTripUpdateBlobs(tuBlobs, warehouseDir, ingestTs)
-    val vpBlobs = RtDecode.readFeedFiles(spark, vehiclePositionsDir)
-      .select("content").as[Array[Byte]]
-    val vp = RtDecode.decodeVehicleBlobs(vpBlobs)
-    appendBronze(vp.toDF(), s"$warehouseDir/bronze/vehicle_positions_raw", ingestTs)
+    def blobs(dir: String) = RtDecode.readFeedFiles(spark, dir).select("content").as[Array[Byte]]
+    Batch.concurrently(Seq[() => Unit](
+      () => ingestTripUpdateBlobs(blobs(tripUpdatesDir), warehouseDir, ingestTs),
+      () => appendBronze(RtDecode.decodeVehicleBlobs(blobs(vehiclePositionsDir)).toDF(),
+        s"$warehouseDir/bronze/vehicle_positions_raw", ingestTs)))(_())
   }
 }

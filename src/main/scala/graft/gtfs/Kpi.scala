@@ -1,7 +1,7 @@
 package graft.gtfs
 
 import java.time.{LocalDate, ZoneId}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GtfsTime.gtfsTimeToSeconds
@@ -38,25 +38,9 @@ object Kpi {
   def latestDim(dim: DataFrame, keys: String*): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(Schemas.insertDateCol).desc)
-    sizedByEstimate(dim).withColumn("__rn", row_number().over(w))
+    Batch.sizedByEstimate(dim).withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
-
-  /** Partitions for `bytes` of rows: one per
-    * `spark.sql.files.maxPartitionBytes`, at least one.
-    */
-  private def partitionsFor(spark: SparkSession, bytes: BigInt): Int = {
-    val perPartition = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
-    ((bytes + perPartition - 1) / perPartition).max(1).min(Int.MaxValue).toInt
-  }
-
-  /** A batch input coalesced to the partitions its scan's size
-    * estimate needs. On one partition a window over it needs no
-    * Exchange. A streaming input is returned as it is.
-    */
-  private def sizedByEstimate(df: DataFrame): DataFrame =
-    if (df.isStreaming) df
-    else df.coalesce(partitionsFor(df.sparkSession, df.queryExecution.optimizedPlan.stats.sizeInBytes))
 
   /** Materializes a batch result once and coalesces it to the
     * partitions its measured size needs. The row count comes from an
@@ -70,7 +54,7 @@ object Kpi {
     val rows = Observation()
     val done = df.observe(rows, count(lit(1)).as("rows")).localCheckpoint()
     val rowBytes = 8L + df.schema.defaultSize // the planner's row-width rule
-    done.coalesce(partitionsFor(df.sparkSession,
+    done.coalesce(Batch.partitionsFor(df.sparkSession,
       BigInt(rows.get("rows").asInstanceOf[Long]) * rowBytes))
   }
 
@@ -253,7 +237,7 @@ object Kpi {
   def latestVehiclePositions(vehiclePositions: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("vehicle_id"))
       .orderBy(col("timestamp_epoch").desc, col(Schemas.insertDateCol).desc)
-    sizedByEstimate(vehiclePositions.filter(col("vehicle_id").isNotNull))
+    Batch.sizedByEstimate(vehiclePositions.filter(col("vehicle_id").isNotNull))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
       .orderBy(col("vehicle_id"))

@@ -14,7 +14,11 @@ import org.apache.spark.sql.types.StringType
   *
   * Scale design: each transform is projection/derivation only (no
   * shuffle); the watermark filter prunes on the insert_day partition
-  * column + parquet min/max row-group stats on insert_date.
+  * column + parquet min/max row-group stats on insert_date. The 7
+  * refreshes are independent and run at once on the one session
+  * ([[Batch.concurrently]]), so their fixed per-query costs overlap;
+  * each write is coalesced to the partitions its size estimate needs
+  * ([[Batch.sizedByEstimate]]), one file per table for a small refresh.
   */
 object SilverTransforms {
 
@@ -125,8 +129,8 @@ object SilverTransforms {
   def incrementalFilter(bronze: DataFrame, wm: Option[java.time.LocalDateTime]): DataFrame =
     bronze.filter(col(Schemas.insertDateCol) > lit(wm.getOrElse(epoch1900)))
 
-  /** E3, one table: watermark → filter → transform → append. Returns
-    * the number of rows appended THIS refresh, measured by an
+  /** E3, one table: watermark → filter → transform → size → append.
+    * Returns the number of rows appended THIS refresh, measured by an
     * `Observation` riding the write itself — no second scan, and in
     * particular no O(full-history) re-read of the silver table (each
     * refresh touches only partitions newer than the watermark).
@@ -138,19 +142,21 @@ object SilverTransforms {
     val wm = watermark(spark, silverPath, silverName)
     val fresh = fn(incrementalFilter(bronze, wm))
     val obs = org.apache.spark.sql.Observation()
-    val out = fresh.observe(obs, count(lit(1)).as("appended"))
-      .withColumn("insert_day", to_date(col(Schemas.insertDateCol)))
+    val out = Batch.sizedByEstimate(fresh.observe(obs, count(lit(1)).as("appended"))
+      .withColumn("insert_day", to_date(col(Schemas.insertDateCol))))
     out.write.mode("append").option("compression", BronzeIngest.parquetCodec)
       .partitionBy("insert_day").parquet(silverPath)
     obs.get("appended").asInstanceOf[Long]
   }
 
-  /** E3, all 7 tables (the reference fans these out in parallel,
-    * gtfs_silver.py:307-315 — independent Spark actions; serial here,
-    * parallelizable via a FAIR pool at scale).
+  /** E3, all 7 tables at once, as the reference fans them out
+    * (gtfs_silver.py:307-315): independent Spark actions on the one
+    * session, one thread each ([[Batch.concurrently]]). Returns once
+    * every refresh is done; if one fails, the others still finish and
+    * that table's own exception is rethrown.
     */
   def refreshAll(spark: SparkSession, warehouseDir: String): Map[String, Long] =
-    transforms.keys.toSeq.sorted.map { name =>
+    Batch.concurrently(transforms.keys.toSeq.sorted) { name =>
       name -> refreshTable(spark, warehouseDir, name)
     }.toMap
 

@@ -1,6 +1,7 @@
 package graft.gtfs
 
 import java.time.{LocalDate, LocalDateTime, ZoneId}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -27,21 +28,7 @@ class PipelineSpec extends AnyFunSuite {
     */
   private def buildWarehouse(refreshBetween: Boolean, nextDayStatic: Boolean = false)
       : (String, Map[String, Long], Map[String, Long]) = {
-    val root = TestSpark.tempDir("gtfs_pipeline")
-    val src = s"$root/static_src"
-    val tuDir = s"$root/rt/tu"
-    val vpDir = s"$root/rt/vp"
-    val wh = s"$root/warehouse"
-    Fixtures.writeStaticCsvs(src)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tuDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(vpDir))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$tuDir/trip_updates_20250903_0932.pb"),
-      Fixtures.tripUpdatesMatchingStatic(dayStart, feedTs))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$vpDir/vehicle_positions_20250903_0930.pb"),
-      Fixtures.vehiclePositionsSnapshot(feedTs))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$vpDir/vehicle_positions_20250903_0932.pb"),
-      Fixtures.vehiclePositionsSnapshot(feedTs + 120))
-
+    val (src, tuDir, vpDir, wh) = stageFixtures()
     BronzeIngest.loadStatic(spark, src, wh, ts1)
     val firstCounts =
       if (refreshBetween) SilverTransforms.refreshAll(spark, wh) else Map.empty[String, Long]
@@ -52,6 +39,27 @@ class PipelineSpec extends AnyFunSuite {
       SilverTransforms.refreshAll(spark, wh)
     }
     (wh, firstCounts, secondCounts)
+  }
+
+  /** Writes the fixture static CSVs and RT snapshots (one TripUpdates,
+    * two VehiclePositions) to a new root; returns (static dir, TU dir,
+    * VP dir, warehouse dir).
+    */
+  private def stageFixtures(): (String, String, String, String) = {
+    val root = TestSpark.tempDir("gtfs_pipeline")
+    val src = s"$root/static_src"
+    val tuDir = s"$root/rt/tu"
+    val vpDir = s"$root/rt/vp"
+    Fixtures.writeStaticCsvs(src)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tuDir))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(vpDir))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$tuDir/trip_updates_20250903_0932.pb"),
+      Fixtures.tripUpdatesMatchingStatic(dayStart, feedTs))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$vpDir/vehicle_positions_20250903_0930.pb"),
+      Fixtures.vehiclePositionsSnapshot(feedTs))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$vpDir/vehicle_positions_20250903_0932.pb"),
+      Fixtures.vehiclePositionsSnapshot(feedTs + 120))
+    (src, tuDir, vpDir, s"$root/warehouse")
   }
 
   private lazy val (wh, firstCounts, secondCounts) = buildWarehouse(refreshBetween = true)
@@ -194,6 +202,56 @@ class PipelineSpec extends AnyFunSuite {
     val observedStream = spark.readStream.schema(diskSchema)
       .parquet(s"$wh/silver/trip_stop_times_silver")
     assert(Kpi.delaySpine(observedStream, silver("stop_times_static_silver"), serviceDate).isStreaming)
+  }
+
+  /** Parquet data files under `dir`, at any depth (checksums excluded). */
+  private def parquetFiles(dir: String): Seq[java.nio.file.Path] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally walk.close()
+  }
+
+  test("each load writes one parquet file per bronze and silver table") {
+    // The two VP snapshots are two input splits, yet one write of the load.
+    for (name <- Schemas.bronze.keys.toSeq.sorted) {
+      val files = parquetFiles(s"$wh/bronze/$name")
+      assert(files.size == 1, s"bronze $name: $files")
+    }
+    for (name <- SilverTransforms.transforms.keys.toSeq.sorted) {
+      val files = parquetFiles(s"$wh/silver/$name")
+      assert(files.size == 1, s"silver $name: $files")
+    }
+  }
+
+  test("loadStatic checks every file is present before it writes any table") {
+    val (src, _, _, whMissing) = stageFixtures()
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$src/trips.txt"))
+    val e = intercept[IllegalArgumentException](BronzeIngest.loadStatic(spark, src, whMissing, ts1))
+    assert(e.getMessage.contains("missing GTFS files: trips.txt"), e.getMessage)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$whMissing/bronze")))
+  }
+
+  test("refreshAll: one unreadable bronze table fails alone; the others are written exactly") {
+    val (src, tuDir, vpDir, whBroken) = stageFixtures()
+    BronzeIngest.loadStatic(spark, src, whBroken, ts1)
+    BronzeIngest.loadRt(spark, tuDir, vpDir, whBroken, ts2)
+    val garbage = java.nio.file.Paths.get(s"$whBroken/bronze/routes_static/insert_day=2025-09-03/garbage.parquet")
+    java.nio.file.Files.write(garbage, "not a parquet file".getBytes("UTF-8"))
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-batch-"))
+
+    val e = intercept[Exception](SilverTransforms.refreshAll(spark, whBroken))
+    assert(poolThreads.isEmpty, s"pool threads alive after refreshAll: $poolThreads")
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    val direct = intercept[Exception](SilverTransforms.refreshTable(spark, whBroken, "routes_static_silver"))
+    assert(e.getClass == direct.getClass)
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+    assert(messages(e).contains("garbage.parquet"), messages(e))
+    for (name <- SilverTransforms.transforms.keys.toSeq.sorted if name != "routes_static_silver") {
+      val want = silver(name).collect().map(_.toString).sorted
+      val got = SilverTransforms.readSilver(spark, whBroken, name).collect().map(_.toString).sorted
+      assert(got.sameElements(want), s"$name: ${got.toSeq} != ${want.toSeq}")
+    }
   }
 
   test("D1/D2: warehouse registers as SQL-addressable catalog tables with pruning") {
