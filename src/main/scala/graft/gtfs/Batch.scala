@@ -7,9 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The batch path's two execution rules, shared by bronze, silver and
   * the KPI layer.
   *
-  * 1. Independent table writes run at once ([[concurrently]]). A small
-  *    table's write costs about as much as a large one's (planning, job
-  *    scheduling, file commit), so on one session the fixed costs of
+  * 1. Independent table writes and silver refreshes run at once
+  *    ([[concurrently]]). A small table's job costs about as much as a
+  *    large one's (planning, job scheduling, file commit), so on one
+  *    session the fixed costs of
   *    the reference's parallel tasks (gtfs_silver.py:307-315,
   *    gtfs_rt_minutely.py:351) overlap instead of adding up.
   * 2. Every write, and every window over a dimension, runs on the
@@ -19,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Batch {
 
-  /** The most writes [[concurrently]] runs at once: the 7 silver tables. */
+  /** The most items [[concurrently]] runs at once: the 7 silver refreshes. */
   val MaxThreads = 7
 
   /** Runs `f` on every item at once, one daemon thread per item (at

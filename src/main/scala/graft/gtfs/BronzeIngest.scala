@@ -110,8 +110,8 @@ object BronzeIngest {
     path
   }
 
-  /** The codec of every bronze and silver parquet file: zstd stores
-    * the warehouse in fewer bytes than Spark's default, snappy.
+  /** The codec of every bronze parquet file: zstd stores the warehouse
+    * in fewer bytes than Spark's default, snappy.
     */
   val parquetCodec = "zstd"
 
@@ -129,22 +129,28 @@ object BronzeIngest {
       .partitionBy("insert_day")
       .parquet(tablePath)
 
-  /** Read a bronze table back (empty-but-typed if never written).
-    * Schema-driven read (declared columns + the insert_day partition
-    * column): no inference pass, and an empty table (zero-row append
-    * leaves no data files) still reads as an empty typed DataFrame.
+  /** A bronze table's on-disk schema: its declared columns plus the
+    * insert_day partition column.
     */
-  def readBronze(spark: SparkSession, tablePath: String, name: String): DataFrame = {
-    val schema = Schemas.bronze(name)
+  private[gtfs] def diskSchema(name: String): StructType =
+    StructType(Schemas.bronze(name).fields :+
+      org.apache.spark.sql.types.StructField("insert_day", org.apache.spark.sql.types.DateType))
+
+  /** A bronze table with its insert_day partition column, so a filter on
+    * it prunes partitions. Schema-driven read: no inference pass, and an
+    * empty table (a zero-row append leaves no data files) or one never
+    * written still reads as an empty typed DataFrame.
+    */
+  private[gtfs] def readBronzeDays(spark: SparkSession, tablePath: String, name: String): DataFrame =
     if (!pathExists(spark, tablePath))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val diskSchema = StructType(schema.fields :+
-        org.apache.spark.sql.types.StructField("insert_day", org.apache.spark.sql.types.DateType))
-      spark.read.schema(diskSchema).parquet(tablePath)
-        .select(schema.fieldNames.map(col).toSeq: _*)
-    }
-  }
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], diskSchema(name))
+    else spark.read.schema(diskSchema(name)).parquet(tablePath)
+
+  /** Read a bronze table back: its declared columns (empty-but-typed if
+    * never written).
+    */
+  def readBronze(spark: SparkSession, tablePath: String, name: String): DataFrame =
+    readBronzeDays(spark, tablePath, name).drop("insert_day")
 
   /** E1, the daily static load (gtfs_static_daily.py:144-206): the 4
     * GTFS text files → typed bronze tables. `srcDir` holds the

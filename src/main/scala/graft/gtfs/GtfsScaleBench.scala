@@ -7,7 +7,11 @@ import org.apache.spark.sql.functions._
   * deterministic warehouse orders of magnitude beyond the fixtures
   * (20k trips × 15 stops schedule, ~1M RT observations over 3 ingest
   * days) straight into bronze, then times the incremental silver
-  * refresh and every KPI against it.
+  * refresh and every KPI against it. `silver_refresh` is the first
+  * `refreshAll`: silver is a view over bronze, so it is the 7
+  * count-and-max jobs over the new bronze rows' `insert_date` that move
+  * the tables' watermarks, not a copy; `silver_noop_refresh` is the
+  * second, with nothing past the marks.
   *
   *   sbt "runMain graft.gtfs.GtfsScaleBench"
   *

@@ -1,9 +1,8 @@
 package graft.gtfs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DateType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming assembly of the RT pipeline (SURVEY.md §2.10,
   * §7.1 step 6): the engine-native replacement for the reference's
@@ -13,16 +12,19 @@ import org.apache.spark.sql.types.{DateType, StructType}
   * Landing dir of protobuf snapshots → file-source stream (the
   * processed-files checkpoint log supersedes the PUT/PURGE
   * exactly-once dance, T5) → decode per micro-batch → bronze append →
-  * silver stream (bronze parquet is itself a streaming source, so the
-  * silver watermark filter of the batch path disappears — T7).
+  * silver stream. Silver is a view over bronze
+  * ([[SilverTransforms]]): the silver stream tails the bronze parquet
+  * as a file source, and each micro-batch only moves the table's
+  * visibility watermark past the rows it took (T7). Its source log
+  * keeps it from re-reading bronze files; the batch path's watermark
+  * filter is not needed.
   *
   * Tests drive this with Trigger.AvailableNow; production parity is
-  * Trigger.ProcessingTime("2 minutes") / ("5 minutes").
+  * Trigger.ProcessingTime("2 minutes").
   */
 object RtStream {
 
   val rtTrigger: Trigger = Trigger.ProcessingTime("2 minutes")
-  val silverTrigger: Trigger = Trigger.ProcessingTime("5 minutes")
 
   /** The binaryFile source's fixed schema — streaming sources must be
     * given a schema explicitly (no inference pass at stream start).
@@ -107,31 +109,29 @@ object RtStream {
       .start()
   }
 
-  /** Bronze→silver as a native streaming query: the parquet bronze
-    * table is the streaming source, the silver projection runs per
-    * micro-batch, and the file-source log IS the incremental watermark
-    * (P5/T7 without the scalar subquery).
+  /** Bronze→silver as a native streaming query: the bronze parquet table
+    * is the streaming source, read for `insert_date` alone, and each
+    * micro-batch moves the silver table's watermark to the newest stamp
+    * it took ([[SilverTransforms.publish]], the batch refresh's writer).
+    * Nothing is copied; the query's progress still counts the rows it
+    * took. The mark only moves forward, so a replayed batch is a no-op
+    * without a marker of its own.
     */
   def startSilverStream(spark: SparkSession, warehouseDir: String, silverName: String,
                         checkpointDir: String,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val (bronzeName, fn) = SilverTransforms.transforms(silverName)
-    val schema = StructType(Schemas.bronze(bronzeName).fields :+
-      org.apache.spark.sql.types.StructField("insert_day", DateType))
+    val bronzeName = SilverTransforms.transforms(silverName)._1
     spark.readStream
-      .schema(schema)
+      .schema(BronzeIngest.diskSchema(bronzeName))
       .parquet(s"$warehouseDir/bronze/$bronzeName")
-      .drop("insert_day")
-      .transform(fn)
-      .withColumn("insert_day", to_date(col(Schemas.insertDateCol)))
+      .select(Schemas.insertDateCol)
       .writeStream
-      .format("parquet")
-      .option("compression", BronzeIngest.parquetCodec)
-      .option("path", s"$warehouseDir/silver/$silverName")
       .option("checkpointLocation", checkpointDir)
-      .partitionBy("insert_day")
-      .outputMode("append")
       .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        SilverTransforms.publish(spark, warehouseDir, silverName, batch)
+        ()
+      }
       .start()
   }
 

@@ -1,6 +1,11 @@
 package graft.gtfs
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.time.LocalDateTime
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -8,23 +13,30 @@ import org.apache.spark.sql.types.StringType
   * dags/gtfs_silver.py:125-213, as pure `DataFrame => DataFrame`
   * transforms plus the high-watermark incremental runner (P5).
   *
-  * Invariant (property-tested): applying the transform to one big
-  * batch ≡ applying it to N incremental batches — so the same code
-  * serves the batch path and the per-micro-batch streaming path.
+  * Each transform is a row-for-row projection of one bronze table that
+  * keeps bronze's `insert_date`, so silver is not stored: a silver table
+  * is its transform over the bronze rows at or below the table's
+  * visibility watermark, one ISO timestamp in `silver/<table>/_watermark`.
+  * A refresh only moves that mark; a bronze row shows in silver once a
+  * refresh (or the silver stream, [[RtStream.startSilverStream]]) has
+  * passed it, as in the reference. Both move the mark through one writer
+  * ([[publish]]), and the mark only moves forward, so a replayed refresh
+  * or stream batch changes nothing.
   *
-  * Scale design: each transform is projection/derivation only (no
-  * shuffle); the watermark filter prunes on the insert_day partition
-  * column + parquet min/max row-group stats on insert_date. The 7
+  * Invariant (property-tested): one big refresh ≡ N incremental ones.
+  *
+  * Scale design: a refresh is one aggregate job (count and max of
+  * `insert_date`) over the bronze rows past the mark, reading one column
+  * of the partitions from the mark's day on, with no shuffle; it writes
+  * one small file. A read prunes the partitions after the mark's day and
+  * pushes the `insert_date` bound to the parquet row groups. The 7
   * refreshes are independent and run at once on the one session
-  * ([[Batch.concurrently]]), so their fixed per-query costs overlap;
-  * each write is coalesced to the partitions its size estimate needs
-  * ([[Batch.sizedByEstimate]]), one file per table for a small refresh.
+  * ([[Batch.concurrently]]), so their fixed per-query costs overlap.
   */
 object SilverTransforms {
 
   /** '1900-01-01' cold-start watermark (gtfs_silver.py:133). */
-  val epoch1900: java.time.LocalDateTime =
-    java.time.LocalDateTime.of(1900, 1, 1, 0, 0, 0)
+  val epoch1900: LocalDateTime = LocalDateTime.of(1900, 1, 1, 0, 0, 0)
 
   // ---- the 7 projections (column lists from gtfs_silver.py) ----
 
@@ -86,68 +98,111 @@ object SilverTransforms {
     "trip_stop_times_silver" -> ("trip_stop_times", tripStopTimes),
     "vehicle_positions_silver" -> ("vehicle_positions_raw", vehiclePositions))
 
-  // ---- incremental runner ----
+  // ---- the view and its watermark ----
 
-  /** Silver on-disk schema: declared columns + the insert_day
-    * partition column. Passed to every silver read so nothing ever
-    * infers — required for correctness on an empty table (a zero-row
-    * append leaves a dir with no data files, where inference fails)
-    * and the right call at scale anyway (no schema-discovery pass).
-    */
-  private def silverDiskSchema(name: String) =
-    org.apache.spark.sql.types.StructType(Schemas.silver(name).fields :+
-      org.apache.spark.sql.types.StructField("insert_day", org.apache.spark.sql.types.DateType))
+  /** The one file a silver table stores: its visibility watermark. */
+  val MarkFile = "_watermark"
 
-  /** MAX(insert_date) of an existing silver table, or None when cold
-    * (A1 — the only value that ever reaches the driver).
-    *
-    * Partition-pruned: insert_day is the partition column and ISO
-    * dates order lexicographically, so the maximum insert_date lives
-    * in the last partition directory — one FS listing plus a
-    * single-partition scan, O(one day) instead of O(full history) on
-    * the every-5-minutes refresh path.
+  private def markPath(silverPath: String) = new Path(silverPath, MarkFile)
+
+  /** The file system of `p`, without a checksum layer: the mark is one
+    * line, and a `.crc` sidecar beside it would only be a second file.
     */
-  def watermark(spark: SparkSession, silverPath: String, silverName: String): Option[java.time.LocalDateTime] = {
-    val root = new org.apache.hadoop.fs.Path(silverPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    val dayDirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(n => n.startsWith("insert_day=") && !n.endsWith("__HIVE_DEFAULT_PARTITION__"))
-    if (dayDirs.isEmpty) return None
-    val lastDay = dayDirs.max // ISO yyyy-MM-dd sorts chronologically
-    spark.read.schema(Schemas.silver(silverName)).parquet(s"$silverPath/$lastDay")
-      .agg(max(col(Schemas.insertDateCol))).head().get(0) match {
-        case null => None
-        case t: java.time.LocalDateTime => Some(t)
-        case other => Some(java.time.LocalDateTime.parse(other.toString.replace(' ', 'T')))
+  private def fileSystem(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sessionState.newHadoopConf()) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
+
+  /** The visibility watermark of a silver table: the newest bronze
+    * `insert_date` it shows, or None before its first refresh. One
+    * small file read, whatever the table's history.
+    */
+  def watermark(spark: SparkSession, silverPath: String, silverName: String): Option[LocalDateTime] = {
+    val p = markPath(silverPath)
+    val fs = fileSystem(spark, p)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(LocalDateTime.parse(new String(in.readAllBytes(), UTF_8).trim)) finally in.close()
+    }
+  }
+
+  private val markLocks = new ConcurrentHashMap[String, AnyRef]()
+
+  /** Moves a table's watermark to `to` if that is later; never back, so
+    * moving it again to the same place is a no-op. The mark is written
+    * under a temp name and renamed into place, so a reader sees the old
+    * mark or the new one, never a partial file.
+    */
+  private def advance(spark: SparkSession, warehouseDir: String, silverName: String, to: LocalDateTime): Unit = {
+    val silverPath = s"$warehouseDir/silver/$silverName"
+    markLocks.computeIfAbsent(silverPath, _ => new AnyRef).synchronized {
+      if (!watermark(spark, silverPath, silverName).exists(!to.isAfter(_))) {
+        val dst = markPath(silverPath)
+        val fs = fileSystem(spark, dst)
+        val tmp = new Path(silverPath, s".$MarkFile.${UUID.randomUUID()}.tmp")
+        val out = fs.create(tmp, true)
+        try out.write(to.toString.getBytes(UTF_8)) finally out.close()
+        // A local or POSIX rename replaces the old mark atomically; a
+        // store whose rename will not replace (HDFS) needs the delete.
+        if (!fs.rename(tmp, dst)) {
+          fs.delete(dst, false)
+          if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"cannot move $tmp to $dst")
+        }
       }
+    }
+  }
+
+  /** The one writer of silver: counts `rows` and takes their newest
+    * `insert_date` in one Spark job with no shuffle (an `Observation`
+    * over a scan of `insert_date` alone, into the noop sink), then moves
+    * the table's watermark there. Those rows are then visible. Returns
+    * the row count. The batch refresh and the silver stream's
+    * micro-batches both publish through it.
+    */
+  private[gtfs] def publish(spark: SparkSession, warehouseDir: String, silverName: String,
+                            rows: DataFrame): Long = {
+    val obs = Observation()
+    rows.select(col(Schemas.insertDateCol))
+      .observe(obs, count(lit(1)).as("rows"), max(col(Schemas.insertDateCol)).as("newest"))
+      .write.format("noop").mode("overwrite").save()
+    val tally = obs.get
+    Option(tally("newest")).foreach(t => advance(spark, warehouseDir, silverName, t.asInstanceOf[LocalDateTime]))
+    tally("rows").asInstanceOf[Long]
   }
 
   /** The P5 predicate: `insert_date > COALESCE(max_silver, 1900-01-01)`
     * (gtfs_silver.py:133).
     */
-  def incrementalFilter(bronze: DataFrame, wm: Option[java.time.LocalDateTime]): DataFrame =
+  def incrementalFilter(bronze: DataFrame, wm: Option[LocalDateTime]): DataFrame =
     bronze.filter(col(Schemas.insertDateCol) > lit(wm.getOrElse(epoch1900)))
 
-  /** E3, one table: watermark → filter → transform → size → append.
-    * Returns the number of rows appended THIS refresh, measured by an
-    * `Observation` riding the write itself — no second scan, and in
-    * particular no O(full-history) re-read of the silver table (each
-    * refresh touches only partitions newer than the watermark).
+  /** The bronze rows of a silver table past its watermark: the P5
+    * predicate, plus `insert_day >= to_date(mark)` so the scan opens only
+    * the partitions from the mark's day on.
     */
-  def refreshTable(spark: SparkSession, warehouseDir: String, silverName: String): Long = {
-    val (bronzeName, fn) = transforms(silverName)
-    val silverPath = s"$warehouseDir/silver/$silverName"
-    val bronze = BronzeIngest.readBronze(spark, s"$warehouseDir/bronze/$bronzeName", bronzeName)
-    val wm = watermark(spark, silverPath, silverName)
-    val fresh = fn(incrementalFilter(bronze, wm))
-    val obs = org.apache.spark.sql.Observation()
-    val out = Batch.sizedByEstimate(fresh.observe(obs, count(lit(1)).as("appended"))
-      .withColumn("insert_day", to_date(col(Schemas.insertDateCol))))
-    out.write.mode("append").option("compression", BronzeIngest.parquetCodec)
-      .partitionBy("insert_day").parquet(silverPath)
-    obs.get("appended").asInstanceOf[Long]
+  private[gtfs] def pending(spark: SparkSession, warehouseDir: String, silverName: String): DataFrame = {
+    val bronzeName = transforms(silverName)._1
+    val wm = watermark(spark, s"$warehouseDir/silver/$silverName", silverName)
+    val bronze = BronzeIngest.readBronzeDays(spark, s"$warehouseDir/bronze/$bronzeName", bronzeName)
+    incrementalFilter(bronze.filter(col("insert_day") >= lit(wm.getOrElse(epoch1900).toLocalDate)), wm)
   }
+
+  /** The silver view: `fn` over the bronze rows (with their `insert_day`
+    * column) at or below `mark`. `insert_day <= to_date(mark)` prunes the
+    * partitions loaded after the mark's day.
+    */
+  private[gtfs] def visible(fn: DataFrame => DataFrame, bronze: DataFrame, mark: LocalDateTime): DataFrame =
+    fn(bronze.filter(col("insert_day") <= lit(mark.toLocalDate) && col(Schemas.insertDateCol) <= lit(mark)))
+
+  /** E3, one table: moves the watermark over the bronze rows stamped
+    * after it. Returns the number of rows that became visible THIS
+    * refresh. It reads only `insert_date` of the partitions from the
+    * mark's day on, and writes nothing but the mark.
+    */
+  def refreshTable(spark: SparkSession, warehouseDir: String, silverName: String): Long =
+    publish(spark, warehouseDir, silverName, pending(spark, warehouseDir, silverName))
 
   /** E3, all 7 tables at once, as the reference fans them out
     * (gtfs_silver.py:307-315): independent Spark actions on the one
@@ -160,13 +215,15 @@ object SilverTransforms {
       name -> refreshTable(spark, warehouseDir, name)
     }.toMap
 
-  /** Read a silver table back (empty-but-typed when absent). */
+  /** Read a silver table: its transform over the bronze rows at or below
+    * its watermark (empty-but-typed before its first refresh).
+    */
   def readSilver(spark: SparkSession, warehouseDir: String, name: String): DataFrame = {
-    val path = s"$warehouseDir/silver/$name"
-    val schema = Schemas.silver(name)
-    if (!BronzeIngest.pathExists(spark, path))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(silverDiskSchema(name)).parquet(path)
-      .select(schema.fieldNames.map(col).toSeq: _*)
+    val (bronzeName, fn) = transforms(name)
+    watermark(spark, s"$warehouseDir/silver/$name", name) match {
+      case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.silver(name))
+      case Some(mark) =>
+        visible(fn, BronzeIngest.readBronzeDays(spark, s"$warehouseDir/bronze/$bronzeName", bronzeName), mark)
+    }
   }
 }

@@ -211,16 +211,81 @@ class PipelineSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  test("each load writes one parquet file per bronze and silver table") {
+  test("each load writes one parquet file per bronze table") {
     // The two VP snapshots are two input splits, yet one write of the load.
     for (name <- Schemas.bronze.keys.toSeq.sorted) {
       val files = parquetFiles(s"$wh/bronze/$name")
       assert(files.size == 1, s"bronze $name: $files")
     }
-    for (name <- SilverTransforms.transforms.keys.toSeq.sorted) {
-      val files = parquetFiles(s"$wh/silver/$name")
-      assert(files.size == 1, s"silver $name: $files")
+  }
+
+  /** Counts the Spark jobs `body` starts, through a SparkListener. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
+    org.apache.spark.sql.graftglue.ColumnGlue.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; org.apache.spark.sql.graftglue.ColumnGlue.flushListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("refreshAll runs at most 7 Spark jobs and stores nothing under silver but the 7 watermarks") {
+    val (src, tuDir, vpDir, whBudget) = stageFixtures()
+    BronzeIngest.loadStatic(spark, src, whBudget, ts1)
+    BronzeIngest.loadRt(spark, tuDir, vpDir, whBudget, ts2)
+    var counts = Map.empty[String, Long]
+    val jobs = jobsOf { counts = SilverTransforms.refreshAll(spark, whBudget) }
+    assert(jobs <= 7, s"refreshAll ran $jobs jobs")
+    assert(counts == Map("routes_static_silver" -> 3L, "trips_static_silver" -> 4L,
+      "stops_static_silver" -> 4L, "stop_times_static_silver" -> 6L, "trip_updates_silver" -> 3L,
+      "trip_stop_times_silver" -> 5L, "vehicle_positions_silver" -> 6L))
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$whBudget/silver"))
+    val stored = try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toList
+      finally walk.close()
+    assert(stored.map(_.getFileName.toString).toSet == Set(SilverTransforms.MarkFile) &&
+      stored.map(_.getParent.getFileName.toString).sorted == SilverTransforms.transforms.keys.toSeq.sorted,
+      s"silver stores $stored")
+  }
+
+  test("the watermark only moves forward: a refresh over rows stamped below it changes nothing") {
+    val (src, _, _, whBack) = stageFixtures()
+    BronzeIngest.loadStatic(spark, src, whBack, ts1)
+    SilverTransforms.refreshAll(spark, whBack)
+    def mark = SilverTransforms.watermark(spark, s"$whBack/silver/routes_static_silver", "routes_static_silver")
+    assert(mark.contains(ts1))
+    BronzeIngest.loadStatic(spark, src, whBack, ts1.minusHours(1)) // a backdated load
+    assert(SilverTransforms.refreshTable(spark, whBack, "routes_static_silver") == 0L)
+    assert(mark.contains(ts1))
+    // every bronze row at or below the mark shows, the backdated ones too
+    assert(SilverTransforms.readSilver(spark, whBack, "routes_static_silver").count() == 6L)
+  }
+
+  test("a refresh scans only the partitions from its mark's day on; a read prunes the days after the mark") {
+    val (src, _, _, whDays) = stageFixtures()
+    BronzeIngest.loadStatic(spark, src, whDays, ts1)
+    BronzeIngest.loadStatic(spark, src, whDays, ts1.plusDays(1))
+    SilverTransforms.refreshAll(spark, whDays) // mark 2025-09-04 04:00
+    BronzeIngest.loadStatic(spark, src, whDays, ts1.plusDays(2)) // 2025-09-05, not yet refreshed
+    /** The executed plan and the files its one parquet scan read. */
+    def scan(df: org.apache.spark.sql.DataFrame): (String, Long) = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val files = plan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+        .map(_.metrics("numFiles").value).sum
+      (plan.toString, files)
+    }
+    val (refreshPlan, refreshFiles) = scan(SilverTransforms.pending(spark, whDays, "stop_times_static_silver"))
+    assert("""PartitionFilters: \[[^\]]*insert_day#\d+ >= 2025-09-04""".r.findFirstIn(refreshPlan).isDefined,
+      refreshPlan)
+    assert(refreshFiles == 2L, "the refresh opens days 09-04 and 09-05 only")
+    val (readPlan, readFiles) = scan(SilverTransforms.readSilver(spark, whDays, "stop_times_static_silver"))
+    assert("""PartitionFilters: \[[^\]]*insert_day#\d+ <= 2025-09-04""".r.findFirstIn(readPlan).isDefined,
+      readPlan)
+    assert(readFiles == 2L, "the read opens days 09-03 and 09-04 only")
+    assert(SilverTransforms.readSilver(spark, whDays, "stop_times_static_silver").count() == 12L)
   }
 
   test("loadStatic checks every file is present before it writes any table") {

@@ -121,4 +121,68 @@ class StreamingSpec extends AnyFunSuite {
     val out = spark.table("dedup_out").select("trip_id").as[String].collect().sorted
     assert(out.toSeq == Seq("TU1", "TU2"))
   }
+
+  private def silverCount(wh: String, table: String): Long =
+    SilverTransforms.readSilver(spark, wh, table).count()
+
+  test("live, then backfill, then live on one warehouse: silver shows every bronze row exactly once") {
+    val root = TestSpark.tempDir("live_backfill_live")
+    val landing = s"$root/landing"
+    val wh = s"$root/warehouse"
+    Files.createDirectories(Paths.get(landing))
+    Files.createDirectories(Paths.get(s"$root/archive/tu"))
+    Files.createDirectories(Paths.get(s"$root/archive/vp"))
+    def liveCycle(): Unit = {
+      RtStream.startTripUpdatesIngest(spark, landing, wh, s"$root/ckpt_ingest").awaitTermination()
+      RtStream.startSilverStream(spark, wh, "trip_updates_silver", s"$root/ckpt_silver").awaitTermination()
+    }
+    def exact(step: String, rows: Long): Unit = {
+      assert(bronzeCount(wh, "trip_updates_raw") == rows, step)
+      assert(silverCount(wh, "trip_updates_silver") == rows, step)
+    }
+
+    Files.write(Paths.get(s"$landing/trip_updates_20250903_0930.pb"), Fixtures.tripUpdatesSnapshot(1756884757L))
+    liveCycle()
+    exact("live", 2)
+
+    Files.write(Paths.get(s"$root/archive/tu/trip_updates_20250903_0932.pb"), Fixtures.tripUpdatesSnapshot(1756884877L))
+    Files.write(Paths.get(s"$root/archive/vp/vehicle_positions_20250903_0932.pb"),
+      Fixtures.vehiclePositionsSnapshot(1756884877L))
+    BronzeIngest.loadRt(spark, s"$root/archive/tu", s"$root/archive/vp", wh)
+    SilverTransforms.refreshAll(spark, wh)
+    exact("backfill", 4)
+
+    Files.write(Paths.get(s"$landing/trip_updates_20250903_0934.pb"), Fixtures.tripUpdatesSnapshot(1756884997L))
+    liveCycle()
+    exact("live again", 6)
+
+    Warehouse.register(spark, wh)
+    assert(spark.sql("SELECT count(*) FROM bronze.trip_updates_raw").head().getLong(0) == 6L)
+    assert(spark.sql("SELECT count(*) FROM silver.trip_updates_silver").head().getLong(0) == 6L)
+    assert(spark.sql("SELECT count(*) FROM silver.vehicle_positions_silver").head().getLong(0) == 3L)
+  }
+
+  test("a replayed silver-stream batch leaves the watermark and the counts unchanged") {
+    val root = TestSpark.tempDir("silver_replay")
+    val landing = s"$root/landing"
+    val wh = s"$root/warehouse"
+    val ckpt = s"$root/ckpt_silver"
+    Files.createDirectories(Paths.get(landing))
+    Files.write(Paths.get(s"$landing/trip_updates_20250903_0930.pb"), Fixtures.tripUpdatesSnapshot(1756884757L))
+    RtStream.startTripUpdatesIngest(spark, landing, wh, s"$root/ckpt_ingest").awaitTermination()
+    RtStream.startSilverStream(spark, wh, "trip_updates_silver", ckpt).awaitTermination()
+    def mark = SilverTransforms.watermark(spark, s"$wh/silver/trip_updates_silver", "trip_updates_silver")
+    val before = mark
+    assert(before.isDefined && silverCount(wh, "trip_updates_silver") == 2L)
+
+    // A crash after the batch moved the mark but before its commit: the
+    // restart re-runs batch 0 over the same bronze files.
+    Files.list(Paths.get(s"$ckpt/commits")).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .foreach(Files.delete)
+    val replay = RtStream.startSilverStream(spark, wh, "trip_updates_silver", ckpt)
+    replay.awaitTermination()
+    assert(replay.recentProgress.map(_.numInputRows).sum == 2L, "batch 0 ran again")
+    assert(mark == before)
+    assert(silverCount(wh, "trip_updates_silver") == 2L)
+  }
 }
