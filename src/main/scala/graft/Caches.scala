@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 /** Registry for intra-query persisted frames (LSH sketch tables,
   * dedup survivor sets, …). Operators persist through `tracked` so a
   * long-lived session doesn't accumulate cached frames across query
-  * invocations: the driver loop (Bench / Verify / any caller) calls
+  * invocations: the driver loop (Verify or any caller) calls
   * `releaseAll()` after the consuming action instead of relying on
   * LRU eviction to shed the old entries' disk store.
   */
@@ -23,7 +23,7 @@ object Caches {
   /** Unpersist every tracked frame and clear the registry. Safe to
     * call between queries: by then the consuming action has
     * materialized the query's result. Pass `blocking = true` when the
-    * caller times the NEXT query (Bench): lazy eviction otherwise
+    * caller times the NEXT query: lazy eviction otherwise
     * overlaps the next measurement and inflates it (measured: q68 at
     * 4.8s mid-suite vs 1.2s solo).
     */

@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** sf1.0 bench-table generator (round-10 directive 3): materialize a
-  * 10× scale-up of the sf0.1 harness tables so `graft.Bench` can
-  * record a committed sf1.0 evidence artifact for the headline
-  * operators.
+/** sf1.0 table generator: materialize a 10× scale-up of the sf0.1
+  * harness tables, so the headline operators can be run (`graft.Verify`)
+  * at a scale where their plans, not their fixed costs, dominate.
   *
   *   sbt "runMain graft.Sf1Gen"          # → target/sf1.0
   *

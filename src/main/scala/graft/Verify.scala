@@ -1,15 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare in `tools/selfcheck.py`.
+  *
+  *   sbt "runMain graft.Verify <sfDir> <outDir>"
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg: comma-separated query-name substrings — dump
-    // only matching queries (dev spot-checks; the driver passes 2 args)
-    val only: Seq[String] =
-      if (args.length > 2) args(2).split(",").map(_.trim).toSeq else Seq.empty
+    val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -19,10 +18,23 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try {
+      dump(spark, sfDir, outDir, SparkEntry.queries, SparkEntry.oracleSql)
+      graft.queries.Graph.releaseEdgeMemo(spark) // session teardown hook
+      graft.llm.Similarity.releaseShared()
+    } finally spark.stop()
+  }
+
+  /** Writes `<outDir>/<query>/` parquet for every query in `queries`
+    * and `<outDir>/oracle_sql.json` from `oracle`. A failing query is
+    * reported on stderr and leaves no readable result, which the
+    * compare counts as a failure.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Map[String, (SparkSession, String) => DataFrame],
+           oracle: Map[String, String]): Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -31,8 +43,8 @@ object Verify {
       finally Caches.releaseAll() // drop intra-query persisted frames
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in the oracle SQL would otherwise make the reader's
+    // json.load fail.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -42,11 +54,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = oracle
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.queries.Graph.releaseEdgeMemo(spark) // session teardown hook
-    graft.llm.Similarity.releaseShared()
-    spark.stop()
   }
 }

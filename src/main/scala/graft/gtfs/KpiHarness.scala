@@ -18,8 +18,9 @@ import graft.Tables.load
   * oracle. A regression anywhere in `Kpi.scala` — the delay spine, the
   * latest-snapshot dim dedup, the GtfsTimeToSeconds parse (the fixture
   * round-trips schedule times through the `H+:MM:SS` string form,
-  * including >24h service-day times), any KPI aggregate — now
-  * hash-mismatches in CORRECTNESS.
+  * including >24h service-day times), any KPI aggregate — fails the
+  * DuckDB compare (`graft.Verify` + `tools/selfcheck.py`, run by
+  * KpiOracleSpec).
   *
   * Determinism rules: the pseudo-random delay is a Knuth-style integer
   * hash of event_id (no RNG); doubles only ever come from exact

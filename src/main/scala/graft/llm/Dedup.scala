@@ -452,7 +452,7 @@ object Dedup {
   /** Session-shared memo of the chooser decision, keyed by the
     * INPUT's canonicalized plan hash so different fixtures in one
     * session (Q25ChooserSpec pins both sides of the boundary) keep
-    * their own decisions while Bench reps / repeat invocations on the
+    * their own decisions while repeat invocations on the
     * same corpus skip the two stats aggregates (round-18 ADVICE: the
     * corpus shape is already known to a repeat caller). A hash
     * collision could only flip the FORM, never the result — both

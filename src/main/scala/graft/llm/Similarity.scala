@@ -93,7 +93,7 @@ object Similarity {
     * an already-quadratic evaluation pass at 20× scale (78.5 s for the
     * sweep alone). The memo persists the RESULT (≤ |queries|·k rows —
     * tiny regardless of corpus size; the cost is the scan, not the
-    * output), keyed by (session, dir) so Bench/Verify loops and the
+    * output), keyed by (session, dir) so Verify loops and the
     * scale stress all share one computation while `Caches.releaseAll`
     * between queries cannot evict it mid-harness. Release explicitly
     * with `releaseShared()` at session teardown.
@@ -107,21 +107,6 @@ object Similarity {
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df
     })
-
-  /** Materialize the session-shared exact top-k memo for `dir` and
-    * return the brute-force scan's wall seconds. Bench calls this in
-    * its `load` phase (the copurchase_edges precedent) whenever a
-    * memo consumer is selected, so the one O(|queries|·|corpus|) scan
-    * every evaluation query shares is REPORTED as session-load cost
-    * instead of silently landing on whichever consumer happens to run
-    * first (round-19 verdict item 6: q26's bench row read 0.10 s
-    * because q237 had already populated the memo).
-    */
-  def warmExactTopK(spark: SparkSession, dir: String): Double = {
-    val t0 = System.nanoTime()
-    exactTopK(spark, dir).queryExecution.toRdd.count()
-    (System.nanoTime() - t0) / 1e9
-  }
 
   /** Unpersist and forget every memoized exact top-k frame. */
   def releaseShared(): Unit = {
@@ -573,7 +558,7 @@ object Similarity {
     ivfTopK(emb, ivfSeeds(emb))
   }
 
-  // The pinned design point, chosen from the round-19 GraphSweep
+  // The pinned design point, chosen from a round-19 graph-knob sweep
   // measurement at sf1.0 (N=20k, 157 cells, 400 queries, flat scan =
   // 8M scored rows/suite): recall@10 = 9773 bp at 1.98M visited rows
   // (4.0× under the flat scan) and a stored index of ≤ N·32 edges.
@@ -584,9 +569,8 @@ object Similarity {
   // under the flat scan — past it the curve flattens (W24/R9 = 9723
   // at 1.86M). Entry selection is measurably NOT the binding axis:
   // ranking all cell medoids by EXACT query cosine instead of the
-  // quantizer's cell order (GraphKnobs.medoidCosEntry, sweepable)
-  // buys +23 bp at this point, so the pinned entry stays the
-  // zero-extra-cost quantizer-cell form. sf0.01/sf0.1 measure
+  // quantizer's cell order bought +23 bp at this point, so the entry
+  // is the zero-extra-cost quantizer-cell form. sf0.01/sf0.1 measure
   // 10000 bp at this point.
   final val GraphM = 12           // intra-cell out-degree of the build
   final val GraphBridgeM = 2      // per-bridge-cell out-degree
@@ -595,22 +579,6 @@ object Similarity {
   final val GraphBeamWidth = 30   // beam width per search round
   final val GraphBeamRounds = 8   // fixed number of expansion rounds
   final val GraphEntryProbes = 6  // entry cells per query (their medoids)
-
-  /** The graph-ANN design point as one value, so the q346 knob sweep
-    * and the [[graft.llm.GraphSweep]] harness measure ALTERNATIVE
-    * settings through the exact production code path instead of a
-    * parallel implementation. Defaults are the pinned constants —
-    * q343/q345/q347 always run the pinned point.
-    */
-  private[llm] final case class GraphKnobs(
-      m: Int = GraphM,
-      bridgeM: Int = GraphBridgeM,
-      buildProbes: Int = GraphBuildProbes,
-      maxDegree: Int = GraphMaxDegree,
-      beamWidth: Int = GraphBeamWidth,
-      rounds: Int = GraphBeamRounds,
-      entryProbes: Int = GraphEntryProbes,
-      medoidCosEntry: Boolean = false)
 
   /** q343 — graph-traversal ANN (the NSW/HNSW family, Malkov &
     * Yashunin 2016, re-expressed as bounded equi-join rounds): the
@@ -777,11 +745,11 @@ object Similarity {
     visited
   }
 
-  private[llm] def graphBeamCore(spark: SparkSession, dir: String,
-      k: GraphKnobs = GraphKnobs()): GraphBeamFrames = {
-    val ix = graphIndexCore(spark, dir, k)
+  private[llm] def graphBeamCore(spark: SparkSession,
+      dir: String): GraphBeamFrames = {
+    val ix = graphIndexCore(spark, dir)
     GraphBeamFrames(ix.assigned, ix.adj, ix.entries,
-      graphSearch(ix, k.beamWidth, k.rounds))
+      graphSearch(ix, GraphBeamWidth, GraphBeamRounds))
   }
 
   /** Cell ranks 1..cap of every vector in `emb` against a seed set —
@@ -798,8 +766,8 @@ object Similarity {
     // a per-vector row_number sort window: element i of the returned
     // array IS cell rank i+1 under the same (dmicro, cid) order, with
     // the same micro-rounded expand-identity distance — bit-identical
-    // output, zero shuffles (see QuantizerTopCap's scaladoc; plans/r20
-    // q343 dump: the rankCells exchange+window pair is gone).
+    // output, zero shuffles (see QuantizerTopCap's scaladoc: the
+    // rankCells exchange+window pair is gone from q343's plan).
     emb.select($"vec_id", $"v", $"nrm",
         posexplode(graft.functions.QuantizerTopCap.topCap($"v", seeds, cap))
           .as(Seq("i", "c")))
@@ -807,152 +775,13 @@ object Similarity {
         $"c.d".as("dmicro"), ($"i" + 1).as("crank"))
   }
 
-  /** Wall-clock decomposition of the graph build + one pinned walk,
-    * stage by stage (each stage forced with an action) — consumed by
-    * [[graft.tools.GraphBuildProbe]]; measurement only, not a query.
-    */
-  private[graft] def buildProbe(spark: SparkSession, dir: String): Unit = {
-    import spark.implicits._
-    val k = GraphKnobs()
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"  $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-    val emb = load(spark, dir, "embeddings")
-      .select($"vec_id", toDouble($"embedding").as("v"))
-      .withColumn("nrm", norm($"v"))
-    val seeds = t("ivfSeeds")(ivfSeeds(emb))
-    val crankCap = math.max(k.entryProbes, k.buildProbes)
-    val ranked = graft.Caches.tracked(rankCells(emb, seeds, crankCap))
-    t("rankCells-mat")(ranked.count())
-    val assigned = ranked.filter($"crank" === 1)
-      .select($"vec_id", $"v", $"nrm", $"cid".as("cell"), $"dmicro")
-    val second = ranked.filter($"crank" >= 2 && $"crank" <= k.buildProbes)
-      .select($"vec_id", $"cid".as("cell2"))
-    def pairSim(xv: org.apache.spark.sql.Column, xn: org.apache.spark.sql.Column,
-        yv: org.apache.spark.sql.Column, yn: org.apache.spark.sql.Column) =
-      round(dot(xv, yv) / (xn * yn) * 1e6).cast("long")
-    val members = assigned.select($"cell", $"vec_id", $"v", $"nrm")
-    val intra = members.as("x").join(members.as("y"),
-        $"x.cell" === $"y.cell" && $"x.vec_id" =!= $"y.vec_id")
-      .select($"x.vec_id".as("src"), $"y.vec_id".as("dst"),
-        pairSim($"x.v", $"x.nrm", $"y.v", $"y.nrm").as("sim_micro"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy($"sim_micro".desc, $"dst")))
-      .filter($"rn" <= k.m).drop("rn")
-    t("intra")(intra.write.format("noop").mode("overwrite").save())
-    val bridge = assigned.select($"vec_id", $"v", $"nrm")
-      .join(second, "vec_id").as("x")
-      .join(members.as("y"),
-        $"x.cell2" === $"y.cell" && $"x.vec_id" =!= $"y.vec_id")
-      .select($"x.vec_id".as("src"), $"x.cell2".as("bcell"),
-        $"y.vec_id".as("dst"),
-        pairSim($"x.v", $"x.nrm", $"y.v", $"y.nrm").as("sim_micro"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src", $"bcell").orderBy($"sim_micro".desc, $"dst")))
-      .filter($"rn" <= k.bridgeM).drop("rn").drop("bcell")
-    t("bridge")(bridge.write.format("noop").mode("overwrite").save())
-    val und = intra.unionByName(bridge)
-    val adj = t("adj-checkpoint")(und
-      .select(explode(array(
-        struct($"src", $"dst", $"sim_micro"),
-        struct($"dst".as("src"), $"src".as("dst"), $"sim_micro"))).as("e"))
-      .select($"e.src", $"e.dst", $"e.sim_micro")
-      .distinct()
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"src").orderBy($"sim_micro".desc, $"dst")))
-      .filter($"rn" <= k.maxDegree)
-      .select($"src", $"dst", $"sim_micro")
-      .localCheckpoint(true))
-    val medoid = assigned.withColumn("mrank", row_number().over(
-        Window.partitionBy($"cell").orderBy($"dmicro", $"vec_id")))
-      .filter($"mrank" === 1).select($"cell", $"vec_id".as("medoid"))
-    val qs = t("qs-checkpoint")(assigned.filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-      .localCheckpoint(true))
-    val entries = t("entries-checkpoint")(
-      ranked.filter($"vec_id" % 50 === 0 && $"crank" <= k.entryProbes)
-        .select($"vec_id".as("q_id"), $"cid".as("cell"))
-        .join(medoid, Seq("cell"))
-        .select($"q_id", $"medoid".as("node"))
-        .distinct().localCheckpoint(true))
-    val corpus = t("corpus-checkpoint")(assigned
-      .select($"vec_id".as("node"), $"v".as("nv"), $"nrm".as("nnrm"))
-      .localCheckpoint(true))
-    val ix = GraphIndex(assigned, adj, entries, qs, corpus, medoid)
-    val visited = t("walk-8-rounds")(graphSearch(ix, k.beamWidth, k.rounds))
-    t("rank+drive")(rankVisited(visited)
-      .write.format("noop").mode("overwrite").save())
-  }
-
-  /** Selectivity probe for a LOSSLESS geometric prune of the bridge
-    * join's candidate stream (round-20, verdict item 3) — consumed by
-    * [[graft.tools.BridgePruneProbe]]; measurement only, not a query.
-    * Counts candidates whose centroid-triangle upper bound on cos is
-    * strictly below the exact (ideal) / lower-bound-derived
-    * (realistic) 2nd-best of their (src, bridge-cell) group.
-    */
-  private[graft] def bridgePruneProbe(spark: SparkSession, dir: String): Unit = {
-    import spark.implicits._
-    val k = GraphKnobs()
-    val emb = load(spark, dir, "embeddings")
-      .select($"vec_id", toDouble($"embedding").as("v"))
-      .withColumn("nrm", norm($"v"))
-    val seeds = ivfSeeds(emb)
-    val crankCap = math.max(k.entryProbes, k.buildProbes)
-    val ranked = graft.Caches.tracked(rankCells(emb, seeds, crankCap))
-    val assigned = ranked.filter($"crank" === 1)
-      .select($"vec_id", $"v", $"nrm", $"cid".as("cell"), $"dmicro")
-    val second = ranked.filter($"crank" >= 2 && $"crank" <= k.buildProbes)
-      .select($"vec_id", $"cid".as("cell2"), $"dmicro".as("dx2"))
-    val members = assigned
-      .select($"cell", $"vec_id", $"v", $"nrm", $"dmicro".as("dy2"))
-    val cand = assigned.select($"vec_id", $"v", $"nrm")
-      .join(second, "vec_id").as("x")
-      .join(members.as("y"),
-        $"x.cell2" === $"y.cell" && $"x.vec_id" =!= $"y.vec_id")
-      .select($"x.vec_id".as("src"), $"x.cell2".as("bcell"),
-        $"y.vec_id".as("dst"),
-        round(dot($"x.v", $"y.v") / ($"x.nrm" * $"y.nrm") * 1e6)
-          .cast("long").as("sim"),
-        $"x.nrm".as("xn"), $"y.nrm".as("yn"),
-        sqrt($"x.dx2" / 1e6).as("dx"), sqrt($"y.dy2" / 1e6).as("dy"))
-      .withColumn("lball", greatest(abs($"dx" - $"dy"), lit(0.0)))
-      .withColumn("ub", round((($"xn" * $"xn" + $"yn" * $"yn"
-          - $"lball" * $"lball") / (lit(2.0) * $"xn" * $"yn")) * 1e6)
-        .cast("long"))
-      .withColumn("lb", round((($"xn" * $"xn" + $"yn" * $"yn"
-          - ($"dx" + $"dy") * ($"dx" + $"dy")) / (lit(2.0) * $"xn" * $"yn")) * 1e6)
-        .cast("long"))
-    val c = graft.Caches.tracked(cand)
-    val wDesc = Window.partitionBy($"src", $"bcell").orderBy($"sim".desc, $"dst")
-    val wLb = Window.partitionBy($"src", $"bcell").orderBy($"lb".desc, $"dst")
-    val gg = c.withColumn("rks", row_number().over(wDesc))
-      .withColumn("rkl", row_number().over(wLb))
-    val t2e = gg.filter($"rks" === 2)
-      .select($"src", $"bcell", $"sim".as("t2_exact"))
-    val t2l = gg.filter($"rkl" === 2)
-      .select($"src", $"bcell", $"lb".as("t2_lb"))
-    val res = c.join(t2e, Seq("src", "bcell"), "left")
-      .join(t2l, Seq("src", "bcell"), "left")
-      .agg(count(lit(1)).as("cands"),
-        sum(when($"ub" < $"t2_exact", 1L).otherwise(0L)).as("prune_ideal"),
-        sum(when($"ub" < $"t2_lb", 1L).otherwise(0L)).as("prune_real"))
-      .head
-    println(s"bridge candidates=${res.getLong(0)} " +
-      s"prunable_ideal=${res.getLong(1)} prunable_realistic=${res.getLong(2)}")
-    graft.Caches.releaseAll(blocking = true)
-  }
-
-  private[llm] def graphIndexCore(spark: SparkSession, dir: String,
-      k: GraphKnobs = GraphKnobs()): GraphIndex = {
+  private[llm] def graphIndexCore(spark: SparkSession,
+      dir: String): GraphIndex = {
     import spark.implicits._
     val emb = load(spark, dir, "embeddings")
       .select($"vec_id", toDouble($"embedding").as("v"))
       .withColumn("nrm", norm($"v"))
-    graphIndexOver(emb, ivfSeeds(emb), k)
+    graphIndexOver(emb, ivfSeeds(emb))
   }
 
   /** The graph build over any (vec_id, v, nrm) corpus and seed set —
@@ -962,8 +791,7 @@ object Similarity {
     * batch).
     */
   private[llm] def graphIndexOver(emb: DataFrame,
-      seeds: Array[(Int, Array[Double])],
-      k: GraphKnobs = GraphKnobs()): GraphIndex = {
+      seeds: Array[(Int, Array[Double])]): GraphIndex = {
     val spark = emb.sparkSession
     import spark.implicits._
     def pairSim(xv: Column, xn: Column, yv: Column, yn: Column): Column =
@@ -973,13 +801,13 @@ object Similarity {
     // per vector; persisted — the adjacency build, bridge, medoid and
     // query stages all consume it (at production: the stored
     // assignment)
-    val crankCap = math.max(k.entryProbes, k.buildProbes)
+    val crankCap = math.max(GraphEntryProbes, GraphBuildProbes)
     val ranked = graft.Caches.tracked(rankCells(emb, seeds, crankCap))
     val assigned = ranked.filter($"crank" === 1)
       .select($"vec_id", $"v", $"nrm", $"cid".as("cell"), $"dmicro")
     // bridge targets: each node's cells ranked 2..buildProbes — the
     // NSW long-range links, one bounded batch per nearby cell
-    val second = ranked.filter($"crank" >= 2 && $"crank" <= k.buildProbes)
+    val second = ranked.filter($"crank" >= 2 && $"crank" <= GraphBuildProbes)
       .select($"vec_id", $"cid".as("cell2"))
 
     val members = assigned.select($"cell", $"vec_id", $"v", $"nrm")
@@ -989,7 +817,7 @@ object Similarity {
         pairSim($"x.v", $"x.nrm", $"y.v", $"y.nrm").as("sim_micro"))
       .withColumn("rn", row_number().over(
         Window.partitionBy($"src").orderBy($"sim_micro".desc, $"dst")))
-      .filter($"rn" <= k.m).drop("rn")
+      .filter($"rn" <= GraphM).drop("rn")
     val bridge = assigned.select($"vec_id", $"v", $"nrm")
       .join(second, "vec_id").as("x")
       .join(members.as("y"),
@@ -999,7 +827,7 @@ object Similarity {
         pairSim($"x.v", $"x.nrm", $"y.v", $"y.nrm").as("sim_micro"))
       .withColumn("rn", row_number().over(
         Window.partitionBy($"src", $"bcell").orderBy($"sim_micro".desc, $"dst")))
-      .filter($"rn" <= k.bridgeM).drop("rn").drop("bcell")
+      .filter($"rn" <= GraphBridgeM).drop("rn").drop("bcell")
     val und = intra.unionByName(bridge)
     // The build outputs MATERIALIZE here (eager localCheckpoint): at
     // production adjacency/corpus/entries are STORED tables a search
@@ -1009,8 +837,7 @@ object Similarity {
     // the whole build subtree, including the k×64 centroid literal)
     // and Catalyst spends minutes re-optimizing it: measured 474 s →
     // ~15 s at sf1.0 from this cut alone. Blocks are freed by the
-    // ContextCleaner once the frames are unreachable (Bench GCs
-    // between queries).
+    // ContextCleaner once the frames are unreachable.
     // Both edge directions in ONE pass over the (expensive) intra ∪
     // bridge subtree (round 20, the connectedComponents edges trick):
     // the previous self-union referenced `und` twice, re-running the
@@ -1031,7 +858,7 @@ object Similarity {
       .dropDuplicates("src", "dst", "sim_micro")
       .withColumn("rn", row_number().over(
         Window.partitionBy($"src").orderBy($"sim_micro".desc, $"dst")))
-      .filter($"rn" <= k.maxDegree)
+      .filter($"rn" <= GraphMaxDegree)
       .select($"src", $"dst", $"sim_micro")
       .localCheckpoint(true)
 
@@ -1047,37 +874,16 @@ object Similarity {
     val qs = assigned.filter($"vec_id" % 50 === 0)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qnrm"))
       .localCheckpoint(false)
-    // Two entry-selection modes. Pinned: the medoids of the query's
-    // entryProbes quantizer-nearest cells (crank ≤ E off the shared
-    // ranked pass — zero extra work). medoidCosEntry: rank ALL cell
-    // medoids by EXACT cosine to the query and enter at the top E —
-    // the entry metric becomes the search metric instead of the
-    // quantizer's L2-to-seed proxy. Costs one |q|×|cells| scored
-    // explode over a collected medoid-vector literal (index metadata,
-    // codebook-sized — the ivfSeeds/rankCells driver-state pattern),
-    // still corpus-size independent per query.
-    val entries = (if (k.medoidCosEntry) {
-      val medVecs = medoid.join(
-          assigned.select($"vec_id", $"v"), $"medoid" === $"vec_id")
-        .select($"medoid", $"v").as[(Long, Seq[Double])]
-        .collect().sortBy(_._1)
-      val mArr = array(medVecs.map { case (mid, mv) =>
-        struct(array(mv.map(lit).toSeq: _*).as("mv"), lit(mid).as("mid"))
-      }.toSeq: _*)
-      qs.select($"q_id", $"qv", $"qnrm", explode(mArr).as("m"))
-        .withColumn("esim",
-          round(dot($"qv", $"m.mv") / ($"qnrm" * norm($"m.mv")) * 1e6).cast("long"))
-        .withColumn("ern", row_number().over(
-          Window.partitionBy($"q_id").orderBy($"esim".desc, $"m.mid")))
-        .filter($"ern" <= k.entryProbes)
-        .select($"q_id", $"m.mid".as("node"))
-    } else {
-      ranked.filter($"vec_id" % 50 === 0 && $"crank" <= k.entryProbes)
-        .select($"vec_id".as("q_id"), $"cid".as("cell"))
-        .join(medoid, Seq("cell"))
-        .select($"q_id", $"medoid".as("node"))
-        .distinct()
-    }).localCheckpoint(false)
+    // Entry points: the medoids of the query's GraphEntryProbes
+    // quantizer-nearest cells (crank ≤ E off the shared ranked pass —
+    // zero extra work).
+    val entries = ranked
+      .filter($"vec_id" % 50 === 0 && $"crank" <= GraphEntryProbes)
+      .select($"vec_id".as("q_id"), $"cid".as("cell"))
+      .join(medoid, Seq("cell"))
+      .select($"q_id", $"medoid".as("node"))
+      .distinct()
+      .localCheckpoint(false)
     val corpus = assigned
       .select($"vec_id".as("node"), $"v".as("nv"), $"nrm".as("nnrm"))
       .localCheckpoint(true)
@@ -1205,19 +1011,18 @@ object Similarity {
     */
   def q349_graph_append_audit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val k = GraphKnobs()
     val emb = load(spark, dir, "embeddings")
       .select($"vec_id", toDouble($"embedding").as("v"))
       .withColumn("nrm", norm($"v"))
     val base = emb.filter($"vec_id" % GraphAppendMod =!= 7)
     val batch = emb.filter($"vec_id" % GraphAppendMod === 7)
     val seeds = ivfSeeds(base)
-    val ix = graphIndexOver(base, seeds, k)
+    val ix = graphIndexOver(base, seeds)
     // assignment of EVERY vector (base + batch) against the base
     // quantizer: batch entry cells for the insert walk, full query
     // entry cells for the serving walk
     val rankedAll = graft.Caches.tracked(
-      rankCells(emb, seeds, k.entryProbes))
+      rankCells(emb, seeds, GraphEntryProbes))
     // Lazy checkpoints (round 20): same lineage cut, but the four
     // entry/query frames materialize inside the first walk round that
     // reads them instead of as four separate eager jobs — q349's wall
@@ -1235,10 +1040,10 @@ object Similarity {
     // ---- insert: one batched walk, top-M visited become out-edges
     val insertVisited = graphSearch(
       ix.copy(entries = entriesOf($"vec_id" % GraphAppendMod === 7),
-        qs = qsOf(batch, lit(true))), k.beamWidth, k.rounds)
+        qs = qsOf(batch, lit(true))), GraphBeamWidth, GraphBeamRounds)
     val newOut = insertVisited.withColumn("rn", row_number().over(
         Window.partitionBy($"q_id").orderBy($"sim_micro".desc, $"node")))
-      .filter($"rn" <= k.m)
+      .filter($"rn" <= GraphM)
       .select($"q_id".as("src"), $"node".as("dst"), $"sim_micro")
     // both directions in one pass over the ranked window's output
     // (round 20) — the self-union form re-ran the rank window per
@@ -1250,7 +1055,7 @@ object Similarity {
     val combined = ix.adj.unionByName(newEdges)
     val appendedAdj = combined.withColumn("rn", row_number().over(
         Window.partitionBy($"src").orderBy($"sim_micro".desc, $"dst")))
-      .filter($"rn" <= k.maxDegree)
+      .filter($"rn" <= GraphMaxDegree)
       .select($"src", $"dst", $"sim_micro")
       .localCheckpoint(false)
 
@@ -1265,7 +1070,7 @@ object Similarity {
       ix.corpus.unionByName(batch
           .select($"vec_id".as("node"), $"v".as("nv"), $"nrm".as("nnrm")))
         .localCheckpoint(false),
-      ix.medoids), k.beamWidth, k.rounds)
+      ix.medoids), GraphBeamWidth, GraphBeamRounds)
     val exact = exactTopK(spark, dir)
     val hits = rankVisited(served)
       .join(exact.select($"q_id", $"neighbor_id"), Seq("q_id", "neighbor_id"))

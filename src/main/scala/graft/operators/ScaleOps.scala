@@ -263,8 +263,7 @@ object ScaleOps {
     * Single-slot on purpose (unlike Graph.edgeMemo's keyed map): the
     * catalog table NAMES are fixed, so only one dir's layout can
     * exist at a time — a session alternating dirs re-buckets on each
-    * switch, which is required for correctness there. [[Bench]] warms
-    * this explicitly and reports the write as a load metric.
+    * switch, which is required for correctness there.
     */
   private var bucketedKey = ""
 
@@ -283,16 +282,6 @@ object ScaleOps {
       writeBucketed(li, "graft_lineitem_b", "okey", 8, "/tmp/graft_buckets/lineitem_b")
       bucketedKey = key
     }
-  }
-
-  /** Pre-bucket the q66 facts; returns write seconds (Bench's load
-    * metric). Idempotent per (session, dir).
-    */
-  def warmBucketedFacts(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Double = {
-    val t0 = System.nanoTime()
-    ensureBucketedFacts(spark, dir)
-    (System.nanoTime() - t0) / 1e9
   }
 
   /** q66 — bucketed co-located join: both fact tables land bucketed +

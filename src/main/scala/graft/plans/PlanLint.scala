@@ -93,9 +93,7 @@ object PlanLint {
     * its derivatives, q42's exclusion predicate) and the
     * global-window-over-a-pre-bounded-aggregate family (inputs are
     * ≤ hundreds of rows by construction; q76 is the escape hatch
-    * when they are not). Shared by PlanLintSpec (the CI gate) and
-    * graft.tools.LintDump (the committed LINT artifact) so the two
-    * can never drift.
+    * when they are not). Read by PlanLintSpec, the CI gate.
     */
   val shippedAllowlist: Map[String, Set[String]] = Map(
     "q26_ann_topk" -> Set("cartesian-product"),
@@ -242,40 +240,6 @@ object PlanLint {
     // literal with the rank-selection predicate in the BNLJ
     // condition — a bounded ×11 attach, not a corpus product
     "q308_source_quantiles" -> Set("cartesian-product"))
-
-  /** Allowlist for the DATA-AWARE grouped-window rule (name →
-    * justification, emitted verbatim into the LINT artifact and the
-    * spec gate). Every entry documents why the window's INPUT is
-    * bounded by something other than data volume — the rule measures
-    * rows-per-group on the harness data, but these inputs grow with
-    * the calendar, the feed cadence, or a value domain, never with
-    * the row count, so the funnel has a constant ceiling however far
-    * the fact data scales.
-    */
-  val groupedWindowAllowlist: Map[String, String] = Map(
-    "q110_peak_concurrency" ->
-      ("the cumulative/peak windows run over the per-(nation, day) " +
-        "DELTA table — intervals reduce to +1/-1 day deltas in one " +
-        "aggregate over the fact scan, so window input is |nations| x " +
-        "|calendar days| (25 x ~2500 here) and grows with the date " +
-        "range only, never with lineitem volume"),
-    "q140_feed_gaps" ->
-      ("the lag window runs over DISTINCT (day, minute) — bounded at " +
-        "1440 rows per day-group by the minute cadence whatever the " +
-        "event rate; the distinct pre-pass is the reduction"),
-    "q68_histogram_quantiles" ->
-      ("the cumulative windows run over the per-(event_type, cent-bin) " +
-        "HISTOGRAM — a mergeable sketch bounded by the value domain at " +
-        "cent resolution (~10k bins/type here), independent of row " +
-        "count; raw events are never sorted"),
-    "q288_knn_shapley" ->
-      ("the rank/suffix-sum windows partition by q_id over the exact " +
-        "per-query ranking — closed-form KNN-Shapley is DEFINED on the " +
-        "full ranking (the documented |q|x|corpus| eval denominator, " +
-        "same family as q26/q300); group count is the query-batch size " +
-        "(the production knob, thousands in a real valuation batch), " +
-        "and the serving-path alternatives (q34/q287/q312) bound their " +
-        "windows to probed candidates and DO lint clean"))
 
   /** Data-aware rule: `low-cardinality-partition-window` — a window
     * partitioned by a key with too few distinct values to spread the

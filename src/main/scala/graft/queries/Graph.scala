@@ -77,9 +77,7 @@ object Graph {
     * — the "shuffle facts once at load" story (same rationale as
     * q66's bucketed load). The persist is deliberately NOT registered
     * with [[graft.Caches]]: releaseAll between queries must not evict
-    * a table whose whole point is cross-query reuse. [[Bench]] warms
-    * it explicitly and reports the build as a load metric, so
-    * per-query timings measure the algorithms, not the shared scan.
+    * a table whose whole point is cross-query reuse.
     */
   private val edgeMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
@@ -148,15 +146,6 @@ object Graph {
       df.count()
       df
     }
-  }
-
-  /** Pre-build the shared edge layouts; returns build seconds
-    * (Bench's load metric). Idempotent — later calls hit the memo.
-    */
-  def warmCopurchaseEdges(spark: SparkSession, dir: String): Double = {
-    val t0 = System.nanoTime()
-    copurchaseDirectedEdges(spark, dir) // builds the packed list first
-    (System.nanoTime() - t0) / 1e9
   }
 
   private def buildCopurchasePackedPairs(spark: SparkSession, dir: String): DataFrame = {

@@ -1,8 +1,12 @@
 #!/usr/bin/env python3
-"""Local mimic of the driver's correctness gate: for each query result
-parquet written by graft.Verify, run the matching oracle SQL in DuckDB
-over the same sf dir and compare values (columns sorted by name, rows
-sorted by all columns). Not part of the shipped library — dev tool only.
+"""DuckDB compare for graft.Verify's dump: for each query result parquet,
+run the matching oracle SQL in DuckDB over the same sf dir and compare
+values (columns sorted by name, rows sorted by all columns).
+
+    python3 tools/selfcheck.py <sf_dir> <out_dir>
+
+Prints one OK/FAIL line per oracle, one ROWS line per result without an
+oracle, then "ALL GREEN" or the failure count; exits 1 on any failure.
 """
 import json, sys, glob, os
 import duckdb
@@ -10,159 +14,41 @@ import pandas as pd
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
-# optional: comma-separated query-name filter (substring match) to
-# spot-check single queries without the slow all-pairs oracles.
-# Entries of the form ">=NNN" auto-enroll every query whose qid is
-# >= NNN (round-14 directive #2: every operator added in round N joins
-# the sf1.0 named sample in round N — pass ">=318" alongside the named
-# list and new queries can never silently miss their at-scale point).
-only = sys.argv[3].split(",") if len(sys.argv) > 3 and sys.argv[3] else None
-min_qids = []
-if only:
-    min_qids = [int(e[2:]) for e in only if e.startswith(">=")]
-    only = [e for e in only if not e.startswith(">=")] or None
-
-
-def qid_of(name: str) -> int:
-    import re
-    m = re.match(r"q(\d+)_", name)
-    return int(m.group(1)) if m else -1
-
-
-def selected(name: str) -> bool:
-    if not min_qids and only is None:
-        return True
-    if min_qids and qid_of(name) >= min(min_qids):
-        return True
-    return bool(only) and any(f in name for f in only)
-# optional 4th arg: comma-separated EXCLUDE substrings — for the sf0.1
-# sweep, where the deliberately-O(n²) all-pairs oracles are intractable
-# but everything else should replay
-exclude = sys.argv[4].split(",") if len(sys.argv) > 4 else []
-# optional SELFCHECK_ORACLE_TIMEOUT env (seconds): interrupt any single
-# oracle replay that exceeds it and record a SKIP instead of hanging
-# the sweep — this is how the sf0.1 sweep self-derives its intractable
-# set instead of trusting a hand-maintained exclude list.
-timeout_s = float(os.environ.get("SELFCHECK_ORACLE_TIMEOUT", "0") or 0)
 
 con = duckdb.connect()
 for p in glob.glob(f"{sf_dir}/*.parquet"):
     name = os.path.basename(p).replace(".parquet", "")
-    # Spark-written tables (e.g. target/sf1.0) are DIRECTORIES of
-    # part files; the driver's testdata tables are single files
+    # Spark-written tables are DIRECTORIES of part files; the harness
+    # testdata tables are single files
     src = f"{p}/*.parquet" if os.path.isdir(p) else p
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 
 
-class OracleTimeout(Exception):
-    pass
-
-
-def run_sql(sql: str) -> pd.DataFrame:
-    """Execute on the shared connection; if timeout_s is set, interrupt
-    the query past the deadline and raise OracleTimeout."""
-    if timeout_s <= 0:
-        return con.execute(sql).df()
-    import threading
-    done, fired = threading.Event(), threading.Event()
-
-    def watchdog():
-        if not done.wait(timeout_s):
-            fired.set()
-            con.interrupt()
-
-    threading.Thread(target=watchdog, daemon=True).start()
-    try:
-        return con.execute(sql).df()
-    except duckdb.Error:
-        if fired.is_set():
-            raise OracleTimeout(f"oracle exceeded {timeout_s:.0f}s")
-        raise
-    finally:
-        done.set()
-
-# Cross-scale vacuity check (round-16 directive #3): an OK on ZERO rows
-# where a SMALLER scale produced >0 is the signature of a structurally
-# denied positive path (q25's 7 -> 0 inverse-scaling shape) - both
-# engines agreeing on empty verifies the filter, not the pipeline.
-# Point SELFCHECK_BASELINE_DIR at a smaller scale's verify output and
-# any such row gets a visible WARN (non-fatal - the gate stays green,
-# the sweep log carries the signal).
-baseline_dir = os.environ.get("SELFCHECK_BASELINE_DIR", "")
-warns = 0
-_baseline_notice_emitted = False
-
-
-def _baseline_notice(msg: str) -> None:
-    # One-time visible notice when the baseline pointer is dead — a
-    # mistyped SELFCHECK_BASELINE_DIR or unreadable baseline parquet
-    # must not be indistinguishable from a genuinely clean run
-    # (round-18 ADVICE: vacuity_warn used to swallow every failure).
-    global _baseline_notice_emitted
-    if not _baseline_notice_emitted:
-        print(f"NOTICE vacuity baseline unusable: {msg} "
-              f"(SELFCHECK_BASELINE_DIR={baseline_dir}) - "
-              f"cross-scale vacuity WARNs are DISABLED for such queries")
-        _baseline_notice_emitted = True
-
-
-if baseline_dir and not os.path.isdir(baseline_dir):
-    _baseline_notice("directory does not exist")
-
-
-def vacuity_warn(name: str, got_rows: int) -> str:
-    global warns
-    if got_rows > 0 or not baseline_dir:
-        return ""
-    base = f"{baseline_dir}/{name}"
-    if not os.path.isdir(base):
-        _baseline_notice(f"no baseline result dir for {name}")
-        return ""
-    try:
-        n = con.execute(f"SELECT count(*) FROM '{base}/*.parquet'").fetchone()[0]
-    except Exception as e:
-        _baseline_notice(f"baseline read failed for {name}: {e}")
-        return ""
-    if n > 0:
-        warns += 1
-        return f"  WARN vacuous: 0 rows here, {n} at baseline"
-    return ""
-
-
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)]
-    # Normalize timestamp-ish dtypes to ns for fair compare
     df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
 
 fails = 0
-skips = 0
 oks = 0
 for name in sorted(oracle):
-    if not selected(name):
-        continue
-    if any(e and e in name for e in exclude):
-        print(f"SKIP {name} (excluded)")
-        continue
     res_path = f"{out_dir}/{name}"
     if not os.path.isdir(res_path):
         print(f"FAIL {name}: no result parquet"); fails += 1; continue
     try:
         got = canon(con.execute(f"SELECT * FROM '{res_path}/*.parquet'").df())
-        want = canon(run_sql(oracle[name]))
-    except OracleTimeout as e:
-        print(f"SKIP {name} ({e})"); skips += 1; continue
+        want = canon(con.execute(oracle[name]).df())
     except Exception as e:
         print(f"FAIL {name}: {e}"); fails += 1; continue
     if list(got.columns) != list(want.columns):
         print(f"FAIL {name}: columns {list(got.columns)} vs {list(want.columns)}"); fails += 1; continue
     if len(got) != len(want):
         print(f"FAIL {name}: rows {len(got)} vs {len(want)}"); fails += 1; continue
-    # Driver's hash renders values: DuckDB HUGEINT sums surface as
-    # float64 ("1772.0") and mismatch Spark's int64 ("1772"). Treat
-    # float-vs-int dtype as failure (int32 vs int64 is fine).
+    # DuckDB HUGEINT sums surface as float64 ("1772.0") and would not
+    # match Spark's int64 ("1772") in a value hash. Treat float-vs-int
+    # dtype as failure (int32 vs int64 is fine).
     kindmix = [c for c in got.columns
                if {got[c].dtype.kind, want[c].dtype.kind} == {"f", "i"}]
     if kindmix:
@@ -170,8 +56,7 @@ for name in sorted(oracle):
               f"(CAST the oracle aggregate AS BIGINT)"); fails += 1; continue
     try:
         pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
-        vac = vacuity_warn(name, len(got))
-        print(f"OK   {name} ({len(got)} rows){vac}"); oks += 1
+        print(f"OK   {name} ({len(got)} rows)"); oks += 1
     except AssertionError as e:
         print(f"FAIL {name}: value mismatch\n{str(e)[:500]}"); fails += 1
 
@@ -182,7 +67,5 @@ for d in sorted(glob.glob(f"{out_dir}/*/")):
         n = con.execute(f"SELECT count(*) FROM '{d}/*.parquet'").fetchone()[0]
         print(f"ROWS {name}: {n} rows (no oracle)")
 
-wtag = f", {warns} vacuity warnings" if warns else ""
-print(f"\n{oks} OK, {skips} skipped (timeout/excluded){wtag}, "
-      f"{'ALL GREEN' if fails == 0 else f'{fails} FAILURES'}")
+print(f"\n{oks} OK, {'ALL GREEN' if fails == 0 else f'{fails} FAILURES'}")
 sys.exit(1 if fails else 0)
