@@ -1,7 +1,7 @@
 package graft.gtfs
 
 import java.time.{LocalDateTime, ZoneId}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -38,32 +38,42 @@ object BronzeIngest {
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  def insertDateLit(ts: LocalDateTime): Column = lit(ts)
+  /** The column a PERMISSIVE CSV read puts a malformed row in. */
+  private val corruptCol = "_corrupt_record"
 
-  /** CSV read with the reference's COPY options
+  /** The one CSV reader, with the reference's COPY options
     * (gtfs_static_daily.py:117-142): header skipped, `"` quoting,
-    * NULL_IF ('', 'NULL', 'null'), malformed rows dropped
-    * (ON_ERROR='CONTINUE'). `schema` is the bronze schema minus
-    * insert_date (positional, like the COPY column list).
+    * NULL_IF ('', 'NULL', 'null'). `mode` decides what becomes of a
+    * malformed row; a `_corrupt_record` column in `schema` receives it
+    * under PERMISSIVE.
     */
-  def readCsv(spark: SparkSession, path: String, schema: StructType,
-              glob: Option[String] = None): DataFrame = {
+  private def readCsvIn(spark: SparkSession, mode: String, path: String, schema: StructType,
+                        glob: Option[String]): DataFrame = {
     val reader = spark.read
       .schema(schema)
       .option("header", "true")
       .option("quote", "\"")
       .option("escape", "\"")
       .option("nullValue", "")
-      .option("mode", "DROPMALFORMED")
+      .option("mode", mode)
+      .option("columnNameOfCorruptRecord", corruptCol)
     val withGlob = glob.fold(reader)(g => reader.option("pathGlobFilter", g))
     val df = withGlob.csv(path)
     // NULL_IF list beyond '': literal "NULL"/"null" strings → null
-    df.schema.fields.filter(_.dataType == StringType).foldLeft(df) { (d, f) =>
+    df.schema.fields.filter(f => f.dataType == StringType && f.name != corruptCol).foldLeft(df) { (d, f) =>
       d.withColumn(f.name,
         when(col(f.name).isin("NULL", "null"), lit(null).cast(StringType))
           .otherwise(col(f.name)))
     }
   }
+
+  /** CSV read with the reference's COPY options, malformed rows dropped
+    * (ON_ERROR='CONTINUE'). `schema` is the bronze schema minus
+    * insert_date (positional, like the COPY column list).
+    */
+  def readCsv(spark: SparkSession, path: String, schema: StructType,
+              glob: Option[String] = None): DataFrame =
+    readCsvIn(spark, "DROPMALFORMED", path, schema, glob)
 
   /** PERMISSIVE audit variant of readCsv (SURVEY §4: the reference's
     * ON_ERROR='CONTINUE' silently loses malformed rows): bad rows land
@@ -73,20 +83,11 @@ object BronzeIngest {
     */
   def readCsvAudited(spark: SparkSession, path: String, schema: StructType)
       : (DataFrame, DataFrame) = {
-    val withCorrupt = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField("_corrupt_record", StringType))
-    val df = spark.read
-      .schema(withCorrupt)
-      .option("header", "true")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("nullValue", "")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .csv(path)
+    val df = readCsvIn(spark, "PERMISSIVE", path,
+      schema.add(corruptCol, StringType), None)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (df.filter(col("_corrupt_record").isNull).drop("_corrupt_record"),
-      df.filter(col("_corrupt_record").isNotNull).select(col("_corrupt_record")))
+    (df.filter(col(corruptCol).isNull).drop(corruptCol),
+      df.filter(col(corruptCol).isNotNull).select(col(corruptCol)))
   }
 
   /** S8/A3 validation read (scripts/check_gtfs_static.py:8-20): every
@@ -122,7 +123,7 @@ object BronzeIngest {
     * size needs, not one per input split.
     */
   def appendBronze(df: DataFrame, tablePath: String, ingestTs: LocalDateTime): Unit =
-    Batch.sizedByEstimate(df.withColumn(Schemas.insertDateCol, insertDateLit(ingestTs))
+    Batch.sizedByEstimate(df.withColumn(Schemas.insertDateCol, lit(ingestTs))
       .withColumn("insert_day", to_date(col(Schemas.insertDateCol))))
       .write.mode("append")
       .option("compression", parquetCodec)
@@ -136,14 +137,17 @@ object BronzeIngest {
     StructType(Schemas.bronze(name).fields :+
       org.apache.spark.sql.types.StructField("insert_day", org.apache.spark.sql.types.DateType))
 
+  /** A bronze table with no rows, typed as on disk ([[diskSchema]]). */
+  private[gtfs] def emptyBronze(spark: SparkSession, name: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], diskSchema(name))
+
   /** A bronze table with its insert_day partition column, so a filter on
     * it prunes partitions. Schema-driven read: no inference pass, and an
     * empty table (a zero-row append leaves no data files) or one never
     * written still reads as an empty typed DataFrame.
     */
   private[gtfs] def readBronzeDays(spark: SparkSession, tablePath: String, name: String): DataFrame =
-    if (!pathExists(spark, tablePath))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], diskSchema(name))
+    if (!pathExists(spark, tablePath)) emptyBronze(spark, name)
     else spark.read.schema(diskSchema(name)).parquet(tablePath)
 
   /** Read a bronze table back: its declared columns (empty-but-typed if
@@ -198,6 +202,15 @@ object BronzeIngest {
     } finally parsed.unpersist()
   }
 
+  /** VehiclePositions blobs → the vehicle_positions_raw bronze table.
+    * Shared by the batch path (loadRt) and the streaming foreachBatch
+    * (RtStream), as [[ingestTripUpdateBlobs]] is for TripUpdates.
+    */
+  def ingestVehicleBlobs(blobs: org.apache.spark.sql.Dataset[Array[Byte]],
+                         warehouseDir: String, ingestTs: LocalDateTime): Unit =
+    appendBronze(RtDecode.decodeVehicleBlobs(blobs).toDF(),
+      s"$warehouseDir/bronze/vehicle_positions_raw", ingestTs)
+
   /** E2 bronze half: decode RT snapshot blobs → three bronze tables.
     * The TripUpdates and VehiclePositions ingests are independent and
     * run at once, as the reference's two RT tasks do
@@ -209,7 +222,6 @@ object BronzeIngest {
     def blobs(dir: String) = RtDecode.readFeedFiles(spark, dir).select("content").as[Array[Byte]]
     Batch.concurrently(Seq[() => Unit](
       () => ingestTripUpdateBlobs(blobs(tripUpdatesDir), warehouseDir, ingestTs),
-      () => appendBronze(RtDecode.decodeVehicleBlobs(blobs(vehiclePositionsDir)).toDF(),
-        s"$warehouseDir/bronze/vehicle_positions_raw", ingestTs)))(_())
+      () => ingestVehicleBlobs(blobs(vehiclePositionsDir), warehouseDir, ingestTs)))(_())
   }
 }

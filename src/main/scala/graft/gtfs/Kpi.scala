@@ -1,7 +1,7 @@
 package graft.gtfs
 
 import java.time.{LocalDate, ZoneId}
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GtfsTime.gtfsTimeToSeconds
@@ -86,12 +86,40 @@ object Kpi {
     if (spine.isStreaming) spine else materialized(spine)
   }
 
+  /** The avg-delay aggregate: mean `delay_s` and `n_obs` per `keys`. */
+  private def avgDelayBy(spine: DataFrame, keys: Column*): DataFrame =
+    spine.groupBy(keys: _*).agg(avg(col("delay_s")).as("avg_delay_s"), count(lit(1)).as("n_obs"))
+
+  /** The avg-delay aggregate per `window(obs_ts, length, slide)`, after
+    * any `keys`. Every avg-delay panel and streaming feed over
+    * event-time windows is this one aggregate: a tumbling bucket has
+    * slide = length, which is the plan `window(obs_ts, length)` makes.
+    */
+  private[gtfs] def avgDelayPer(spine: DataFrame, length: String, slide: String,
+                                keys: Column*): DataFrame =
+    avgDelayBy(spine, keys :+ window(col("obs_ts"), length, slide).as("w"): _*)
+      .select(keys ++ Seq(col("w.start").as("bucket_start"), col("avg_delay_s"), col("n_obs")): _*)
+
+  /** The punctuality aggregate: `n_obs` and `n_on_time` (delay ≤
+    * `thresholdS`) per tumbling `bucket`. Counts stay integral so the
+    * rate derives exactly from them in any engine.
+    */
+  private def punctualityPer(spine: DataFrame, thresholdS: Long, bucket: String): DataFrame =
+    spine.groupBy(window(col("obs_ts"), bucket).as("w"))
+      .agg(count(lit(1)).as("n_obs"),
+        sum(when(col("delay_s") <= thresholdS, 1L).otherwise(0L)).as("n_on_time"))
+      .select(col("w.start").as("bucket_start"), col("n_obs"), col("n_on_time"))
+
+  /** The streaming preamble every streaming feed shares: the lazy
+    * stream-static spine behind an event-time watermark of `lateness`.
+    */
+  private def watermarkedSpine(observedStream: DataFrame, scheduled: DataFrame,
+                               serviceDate: LocalDate, lateness: String): DataFrame =
+    delaySpine(observedStream, scheduled, serviceDate).withWatermark("obs_ts", lateness)
+
   /** README.md:120 — retard moyen dans le temps (15-minute buckets). */
   def avgDelayOverTime(spine: DataFrame, bucket: String = "15 minutes"): DataFrame =
-    spine.groupBy(window(col("obs_ts"), bucket).as("w"))
-      .agg(avg(col("delay_s")).as("avg_delay_s"), count(lit(1)).as("n_obs"))
-      .select(col("w.start").as("bucket_start"), col("avg_delay_s"), col("n_obs"))
-      .orderBy(col("bucket_start"))
+    avgDelayPer(spine, bucket, bucket).orderBy(col("bucket_start"))
 
   /** Streaming form of README.md:120 — the reference recomputes its
     * dashboard from 2-minute RT snapshots, which in Spark is this:
@@ -108,11 +136,7 @@ object Kpi {
   def streamingAvgDelay(observedStream: DataFrame, scheduled: DataFrame,
                         serviceDate: LocalDate, bucket: String = "15 minutes",
                         lateness: String = "30 minutes"): DataFrame =
-    delaySpine(observedStream, scheduled, serviceDate)
-      .withWatermark("obs_ts", lateness)
-      .groupBy(window(col("obs_ts"), bucket).as("w"))
-      .agg(avg(col("delay_s")).as("avg_delay_s"), count(lit(1)).as("n_obs"))
-      .select(col("w.start").as("bucket_start"), col("avg_delay_s"), col("n_obs"))
+    avgDelayPer(watermarkedSpine(observedStream, scheduled, serviceDate, lateness), bucket, bucket)
 
   /** Sliding-window variant of [[avgDelayOverTime]] — a 15-minute
     * average re-evaluated every 5 minutes (the "rolling delay" the
@@ -125,10 +149,7 @@ object Kpi {
     */
   def slidingAvgDelay(spine: DataFrame, bucket: String = "15 minutes",
                       slide: String = "5 minutes"): DataFrame =
-    spine.groupBy(window(col("obs_ts"), bucket, slide).as("w"))
-      .agg(avg(col("delay_s")).as("avg_delay_s"), count(lit(1)).as("n_obs"))
-      .select(col("w.start").as("bucket_start"), col("avg_delay_s"), col("n_obs"))
-      .orderBy(col("bucket_start"))
+    avgDelayPer(spine, bucket, slide).orderBy(col("bucket_start"))
 
   /** Streaming form of [[slidingAvgDelay]] — same watermark regime as
     * [[streamingAvgDelay]]; a sliding window closes when the
@@ -141,11 +162,7 @@ object Kpi {
                                bucket: String = "15 minutes",
                                slide: String = "5 minutes",
                                lateness: String = "30 minutes"): DataFrame =
-    delaySpine(observedStream, scheduled, serviceDate)
-      .withWatermark("obs_ts", lateness)
-      .groupBy(window(col("obs_ts"), bucket, slide).as("w"))
-      .agg(avg(col("delay_s")).as("avg_delay_s"), count(lit(1)).as("n_obs"))
-      .select(col("w.start").as("bucket_start"), col("avg_delay_s"), col("n_obs"))
+    avgDelayPer(watermarkedSpine(observedStream, scheduled, serviceDate, lateness), bucket, slide)
 
   /** README.md:121 — taux de ponctualité (≤ threshold seconds). */
   def punctualityRate(spine: DataFrame, thresholdS: Long = 300L): DataFrame =
@@ -155,16 +172,11 @@ object Kpi {
 
   /** README.md:121 as a time series — the punctuality rate per
     * event-time bucket (the dashboard's trend line, vs
-    * [[punctualityRate]]'s headline scalar). Counts stay integral so
-    * the rate derives exactly from (n_on_time, n_obs) in any engine.
+    * [[punctualityRate]]'s headline scalar), as (n_obs, n_on_time).
     */
   def punctualityOverTime(spine: DataFrame, thresholdS: Long = 300L,
                           bucket: String = "15 minutes"): DataFrame =
-    spine.groupBy(window(col("obs_ts"), bucket).as("w"))
-      .agg(count(lit(1)).as("n_obs"),
-        sum(when(col("delay_s") <= thresholdS, 1L).otherwise(0L)).as("n_on_time"))
-      .select(col("w.start").as("bucket_start"), col("n_obs"), col("n_on_time"))
-      .orderBy(col("bucket_start"))
+    punctualityPer(spine, thresholdS, bucket).orderBy(col("bucket_start"))
 
   /** Streaming form of [[punctualityOverTime]] — same stream-static
     * spine and watermark regime as [[streamingAvgDelay]] (state
@@ -177,12 +189,8 @@ object Kpi {
                            serviceDate: LocalDate, thresholdS: Long = 300L,
                            bucket: String = "15 minutes",
                            lateness: String = "30 minutes"): DataFrame =
-    delaySpine(observedStream, scheduled, serviceDate)
-      .withWatermark("obs_ts", lateness)
-      .groupBy(window(col("obs_ts"), bucket).as("w"))
-      .agg(count(lit(1)).as("n_obs"),
-        sum(when(col("delay_s") <= thresholdS, 1L).otherwise(0L)).as("n_on_time"))
-      .select(col("w.start").as("bucket_start"), col("n_obs"), col("n_on_time"))
+    punctualityPer(watermarkedSpine(observedStream, scheduled, serviceDate, lateness),
+      thresholdS, bucket)
 
   /** README.md:122 — lignes les plus en retard (top-k, named). */
   def topDelayedRoutes(spine: DataFrame, trips: DataFrame, routes: DataFrame,
@@ -190,9 +198,7 @@ object Kpi {
     val tripDim = broadcast(latestDim(trips, "trip_id").select("trip_id", "route_id"))
     val routeDim = broadcast(latestDim(routes, "route_id")
       .select(col("route_id"), col("route_long_name")))
-    spine.join(tripDim, "trip_id")
-      .groupBy(col("route_id"))
-      .agg(avg(col("delay_s")).as("avg_delay_s"), count(lit(1)).as("n_obs"))
+    avgDelayBy(spine.join(tripDim, "trip_id"), col("route_id"))
       .join(routeDim, Seq("route_id"), "left")
       .orderBy(col("avg_delay_s").desc, col("route_id"))
       .limit(k)
@@ -201,8 +207,7 @@ object Kpi {
   /** README.md:123 — top arrêts problématiques. */
   def topProblemStops(spine: DataFrame, stops: DataFrame, k: Int = 10): DataFrame = {
     val stopDim = broadcast(latestDim(stops, "stop_id").select("stop_id", "stop_name"))
-    spine.groupBy(col("stop_id"))
-      .agg(avg(col("delay_s")).as("avg_delay_s"), count(lit(1)).as("n_obs"))
+    avgDelayBy(spine, col("stop_id"))
       .join(stopDim, Seq("stop_id"), "left")
       .orderBy(col("avg_delay_s").desc, col("stop_id"))
       .limit(k)
@@ -210,9 +215,7 @@ object Kpi {
 
   /** README.md:124 — heatmap heures × jours. */
   def delayHeatmap(spine: DataFrame): DataFrame =
-    spine.groupBy((weekday(col("obs_ts")) + 1).as("isodow"),
-        hour(col("obs_ts")).as("hh"))
-      .agg(avg(col("delay_s")).as("avg_delay_s"), count(lit(1)).as("n_obs"))
+    avgDelayBy(spine, (weekday(col("obs_ts")) + 1).as("isodow"), hour(col("obs_ts")).as("hh"))
       .orderBy(col("isodow"), col("hh"))
 
   /** README.md:125 — distribution des retards (1-minute buckets). */
@@ -263,9 +266,6 @@ object Kpi {
 
   /** README.md:129 — évolution du retard par arrêt (hourly buckets). */
   def delayEvolutionPerStop(spine: DataFrame, bucket: String = "1 hour"): DataFrame =
-    spine.groupBy(col("stop_id"), window(col("obs_ts"), bucket).as("w"))
-      .agg(avg(col("delay_s")).as("avg_delay_s"), count(lit(1)).as("n_obs"))
-      .select(col("stop_id"), col("w.start").as("bucket_start"),
-        col("avg_delay_s"), col("n_obs"))
+    avgDelayPer(spine, bucket, bucket, col("stop_id"))
       .orderBy(col("stop_id"), col("bucket_start"))
 }

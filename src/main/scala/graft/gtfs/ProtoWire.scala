@@ -49,15 +49,7 @@ object ProtoWire {
       pos += 4; v
     }
 
-    def readFixed64(): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
-      pos += 8; v
-    }
-
     def readFloat(): Float = java.lang.Float.intBitsToFloat(readFixed32())
-    def readDouble(): Double = java.lang.Double.longBitsToDouble(readFixed64())
 
     /** Sub-reader over a length-delimited field. */
     def readMessage(): Reader = {

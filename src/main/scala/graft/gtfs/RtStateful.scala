@@ -1,7 +1,6 @@
 package graft.gtfs
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One observed (vehicle, stop, ts) step. */
@@ -57,14 +56,11 @@ object RtStateful {
   /** Watermarked event-time windowed delay aggregation (T8 + the
     * "retard moyen dans le temps" KPI as a native streaming query):
     * 15-minute tumbling windows, 10-minute lateness tolerance,
-    * append-mode (windows finalize when the watermark passes).
+    * append-mode (windows finalize when the watermark passes). The
+    * aggregate is [[Kpi.avgDelayPer]], the batch panel's own.
     */
   def delayPerWindow(observations: DataFrame,
                      window_ : String = "15 minutes",
                      lateness: String = "10 minutes"): DataFrame =
-    observations
-      .withWatermark("obs_ts", lateness)
-      .groupBy(window(col("obs_ts"), window_).as("w"))
-      .agg(avg(col("delay_s")).as("avg_delay_s"), count(lit(1)).as("n_obs"))
-      .select(col("w.start").as("bucket_start"), col("avg_delay_s"), col("n_obs"))
+    Kpi.avgDelayPer(observations.withWatermark("obs_ts", lateness), window_, window_)
 }

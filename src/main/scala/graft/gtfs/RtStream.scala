@@ -1,6 +1,6 @@
 package graft.gtfs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -55,13 +55,15 @@ object RtStream {
     }
   }
 
-  /** Stream the TripUpdates feed snapshots: one binary blob per file →
-    * decoded trip headers + exploded stop-time rows, appended to
-    * bronze with the per-batch ingest stamp.
+  /** The one RT ingest stream: the feed's `.pb` snapshots under
+    * `landingDir` as a `binaryFile` stream, one blob per file, handed
+    * per micro-batch to `ingest`, the feed's bronze append. Each batch
+    * runs marker-guarded ([[onceperBatch]] under `table`), so a replayed
+    * batch never double-appends.
     */
-  def startTripUpdatesIngest(spark: SparkSession, landingDir: String,
-                             warehouseDir: String, checkpointDir: String,
-                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+  private def startBlobIngest(spark: SparkSession, table: String, landingDir: String,
+                              checkpointDir: String, trigger: Trigger)
+                             (ingest: Dataset[Array[Byte]] => Unit): StreamingQuery = {
     import spark.implicits._
     spark.readStream.format("binaryFile")
       .schema(binaryFileSchema)
@@ -72,42 +74,30 @@ object RtStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Single-parse path: persists the decoded pairs across the two
-        // bronze writes (no double decode, no double source read).
-        // Marker-guarded so a replayed batch never double-appends.
-        onceperBatch(spark, checkpointDir, "trip_updates", batchId) {
-          BronzeIngest.ingestTripUpdateBlobs(
-            batch.select("content").as[Array[Byte]], warehouseDir, BronzeIngest.parisNow())
-          ()
-        }
+        onceperBatch(spark, checkpointDir, table, batchId)(ingest(batch.as[Array[Byte]]))
         ()
       }
       .start()
   }
 
-  /** Stream the VehiclePositions feed snapshots. */
+  /** Stream the TripUpdates feed snapshots: decoded trip headers +
+    * exploded stop-time rows, appended to bronze with the per-batch
+    * ingest stamp ([[BronzeIngest.ingestTripUpdateBlobs]]).
+    */
+  def startTripUpdatesIngest(spark: SparkSession, landingDir: String,
+                             warehouseDir: String, checkpointDir: String,
+                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startBlobIngest(spark, "trip_updates", landingDir, checkpointDir, trigger)(
+      BronzeIngest.ingestTripUpdateBlobs(_, warehouseDir, BronzeIngest.parisNow()))
+
+  /** Stream the VehiclePositions feed snapshots
+    * ([[BronzeIngest.ingestVehicleBlobs]]).
+    */
   def startVehiclePositionsIngest(spark: SparkSession, landingDir: String,
                                   warehouseDir: String, checkpointDir: String,
-                                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    import spark.implicits._
-    spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
-      .option("pathGlobFilter", "*.pb")
-      .load(landingDir)
-      .select("content")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onceperBatch(spark, checkpointDir, "vehicle_positions", batchId) {
-          val vp = RtDecode.decodeVehicleBlobs(batch.select("content").as[Array[Byte]])
-          BronzeIngest.appendBronze(vp.toDF(), s"$warehouseDir/bronze/vehicle_positions_raw",
-            BronzeIngest.parisNow())
-        }
-        ()
-      }
-      .start()
-  }
+                                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startBlobIngest(spark, "vehicle_positions", landingDir, checkpointDir, trigger)(
+      BronzeIngest.ingestVehicleBlobs(_, warehouseDir, BronzeIngest.parisNow()))
 
   /** Bronze→silver as a native streaming query: the bronze parquet table
     * is the streaming source, read for `insert_date` alone, and each

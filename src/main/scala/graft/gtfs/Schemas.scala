@@ -2,16 +2,17 @@ package graft.gtfs
 
 import org.apache.spark.sql.types._
 
-/** Declared-once schemas for every bronze/silver table of the engine —
-  * the reference declares these twice (Snowflake DDL + pandas column
+/** Declared-once schemas for every bronze table of the engine — the
+  * reference declares these twice (Snowflake DDL + pandas column
   * lists); we keep a single authority and pass it to
   * `spark.read.schema(...)`, never `inferSchema` (SURVEY.md §1.2).
+  * A silver table's schema is its transform's output over these
+  * ([[SilverTransforms]]), so it is declared nowhere else.
   *
   * Bronze column sets: dags/gtfs_static_daily.py:49-101,
-  * dags/gtfs_rt_minutely.py:185-217. Silver: dags/gtfs_silver.py:28-118.
-  * `insert_date` (Paris wall-clock TIMESTAMP_NTZ) is appended to every
-  * table at write time (DDL DEFAULT in the reference,
-  * dags/gtfs_static_daily.py:58).
+  * dags/gtfs_rt_minutely.py:185-217. `insert_date` (Paris wall-clock
+  * TIMESTAMP_NTZ) is appended to every table at write time (DDL
+  * DEFAULT in the reference, dags/gtfs_static_daily.py:58).
   */
 object Schemas {
 
@@ -69,40 +70,6 @@ object Schemas {
     s("trip_id"), s("route_id"), s("vehicle_id"), d("latitude"),
     d("longitude"), l("bearing"), s("stop_id"), l("timestamp_epoch"))
 
-  // ---- SILVER (gtfs_silver.py:28-118) ----
-
-  val routesSilver: StructType = withInsertDate(
-    s("route_id"), s("agency_id"), s("route_long_name"), i("route_type"))
-
-  val tripsSilver: StructType = withInsertDate(
-    s("route_id"), s("service_id"), s("trip_id"), s("trip_headsign"),
-    i("direction_id"), s("shape_id"), i("wheelchair_accessible"),
-    i("bike_allowed"))
-
-  val stopsSilver: StructType = withInsertDate(
-    s("stop_id"), s("stop_code"), s("stop_name"), d("stop_lat"), d("stop_lon"),
-    s("parent_station"), i("wheelchair_boarding"))
-
-  /** arrival_time,departure_time collapse to COALESCE(arrival,
-    * departure) AS intermediate_stop (gtfs_silver.py:79,173).
-    */
-  val stopTimesSilver: StructType = withInsertDate(
-    s("trip_id"), s("intermediate_stop"), s("stop_id"), i("stop_sequence"),
-    i("pickup_type"), i("drop_off_type"))
-
-  /** direction_id retyped NUMBER→STRING with sentinel
-    * 'in experimentation' (gtfs_silver.py:90,184).
-    */
-  val tripUpdatesSilver: StructType = withInsertDate(
-    s("trip_id"), s("route_id"), s("direction_id"))
-
-  val tripStopTimesSilver: StructType = withInsertDate(
-    s("trip_id"), l("stop_sequence"), s("stop_id"), l("intermediate_stop"))
-
-  val vehiclePositionsSilver: StructType = withInsertDate(
-    s("trip_id"), s("route_id"), s("vehicle_id"), d("latitude"),
-    d("longitude"), l("bearing"), s("stop_id"), l("timestamp_epoch"))
-
   /** Catalog: bronze name → schema. */
   val bronze: Map[String, StructType] = Map(
     "routes_static" -> routesStatic,
@@ -112,15 +79,6 @@ object Schemas {
     "trip_updates_raw" -> tripUpdatesRaw,
     "trip_stop_times" -> tripStopTimes,
     "vehicle_positions_raw" -> vehiclePositionsRaw)
-
-  val silver: Map[String, StructType] = Map(
-    "routes_static_silver" -> routesSilver,
-    "trips_static_silver" -> tripsSilver,
-    "stops_static_silver" -> stopsSilver,
-    "stop_times_static_silver" -> stopTimesSilver,
-    "trip_updates_silver" -> tripUpdatesSilver,
-    "trip_stop_times_silver" -> tripStopTimesSilver,
-    "vehicle_positions_silver" -> vehiclePositionsSilver)
 }
 
 // ---- Decoded GTFS-RT row shapes (gtfs_rt_minutely.py:116-117,166-169) ----

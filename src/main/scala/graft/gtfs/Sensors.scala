@@ -28,29 +28,19 @@ object Sensors {
     found
   }
 
-  /** Gate on the day's static bronze load: all four static tables
-    * present (the reference's wait_static_daily sensor semantics).
-    */
-  def waitForStaticBronze(spark: SparkSession, warehouseDir: String,
-                          pokeIntervalMs: Long = 60000L, timeoutMs: Long = 3600000L): Boolean =
-    Seq("routes_static", "trips_static", "stops_static", "stop_times_static")
-      .forall(t => waitForPath(spark, s"$warehouseDir/bronze/$t", pokeIntervalMs, timeoutMs))
-
   /** S8/A3/P7 — the check_gtfs_static.py equivalent
     * (scripts/check_gtfs_static.py:4-20): require the four GTFS files,
-    * read each with header only (no schema, no inference — every
-    * column lands StringType, the `dtype=str` parity), and report
-    * (file, n_rows, n_cols) shapes.
+    * read each with [[BronzeIngest.readCsvAllString]] (every column
+    * StringType, the `dtype=str` parity), and report (file, n_rows,
+    * n_cols) shapes ([[BronzeIngest.shape]]).
     */
   def checkGtfsStatic(spark: SparkSession, staticDir: String): Seq[(String, Long, Int)] = {
     val required = Seq("routes.txt", "trips.txt", "stops.txt", "stop_times.txt")
     required.map { f =>
       val p = s"$staticDir/$f"
       require(BronzeIngest.pathExists(spark, p), s"missing required GTFS file: $p")
-      val df = spark.read.option("header", "true").csv(p)
-      require(df.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.StringType), s"$f: all-string read expected")
-      (f, df.count(), df.columns.length)
+      val (rows, cols) = BronzeIngest.shape(BronzeIngest.readCsvAllString(spark, p))
+      (f, rows, cols)
     }
   }
 

@@ -5,7 +5,7 @@ import java.time.LocalDateTime
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -216,12 +216,13 @@ object SilverTransforms {
     }.toMap
 
   /** Read a silver table: its transform over the bronze rows at or below
-    * its watermark (empty-but-typed before its first refresh).
+    * its watermark. Before its first refresh it is the transform over an
+    * empty bronze table, so its schema is the same either way.
     */
   def readSilver(spark: SparkSession, warehouseDir: String, name: String): DataFrame = {
     val (bronzeName, fn) = transforms(name)
     watermark(spark, s"$warehouseDir/silver/$name", name) match {
-      case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.silver(name))
+      case None => fn(BronzeIngest.emptyBronze(spark, bronzeName))
       case Some(mark) =>
         visible(fn, BronzeIngest.readBronzeDays(spark, s"$warehouseDir/bronze/$bronzeName", bronzeName), mark)
     }

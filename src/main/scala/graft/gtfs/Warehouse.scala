@@ -1,6 +1,6 @@
 package graft.gtfs
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
 
 /** D1/D2 catalog-native: idempotent namespace + table registration so
@@ -20,7 +20,7 @@ object Warehouse {
     */
   private def viewQuery(spark: SparkSession, silverName: String, mark: java.time.LocalDateTime): String = {
     val (bronzeName, fn) = SilverTransforms.transforms(silverName)
-    val bronze = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], BronzeIngest.diskSchema(bronzeName))
+    val bronze = BronzeIngest.emptyBronze(spark, bronzeName)
     SilverTransforms.visible(fn, bronze, mark).queryExecution.analyzed match {
       case Project(columns, Filter(condition, _)) =>
         s"SELECT ${columns.map(_.sql).mkString(", ")} FROM bronze.$bronzeName WHERE ${condition.sql}"

@@ -3,12 +3,12 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale stress drive for the LLM-pipeline layer — the `graft.gtfs.
-  * GtfsScaleBench` analog: synthesizes a deterministic corpus 20×
-  * the sf0.1 bench tables (100k documents with 10% planted near-dups,
-  * 20k embeddings) and times dedup, curation, contamination, sharding
-  * and similarity search against it, with detection-rate invariants
-  * so a silently-degenerate plan fails loudly.
+/** Scale stress drive for the LLM-pipeline layer: synthesizes a
+  * deterministic corpus 20× the sf0.1 bench tables (100k documents
+  * with 10% planted near-dups, 20k embeddings) and times dedup,
+  * curation, contamination, sharding and similarity search against
+  * it, with detection-rate invariants so a silently-degenerate plan
+  * fails loudly.
   *
   *   sbt "runMain graft.llm.LlmScaleBench"
   *

@@ -196,12 +196,23 @@ class PipelineSpec extends AnyFunSuite {
         s"shuffles per panel: ${panels.map(_.shuffles)}")
     } finally graft.Observability.remove(spark, stats)
 
-    val diskSchema = org.apache.spark.sql.types.StructType(
-      Schemas.silver("trip_stop_times_silver").fields :+
-        org.apache.spark.sql.types.StructField("insert_day", org.apache.spark.sql.types.DateType))
-    val observedStream = spark.readStream.schema(diskSchema)
-      .parquet(s"$wh/silver/trip_stop_times_silver")
+    // the source the silver path tails: bronze trip_stop_times through its transform
+    val observedStream = SilverTransforms.tripStopTimes(spark.readStream
+      .schema(BronzeIngest.diskSchema("trip_stop_times")).parquet(s"$wh/bronze/trip_stop_times"))
     assert(Kpi.delaySpine(observedStream, silver("stop_times_static_silver"), serviceDate).isStreaming)
+  }
+
+  test("each silver table reads with one schema before and after its first refresh") {
+    val (src, tuDir, vpDir, whFresh) = stageFixtures()
+    BronzeIngest.loadStatic(spark, src, whFresh, ts1)
+    BronzeIngest.loadRt(spark, tuDir, vpDir, whFresh, ts2)
+    val names = SilverTransforms.transforms.keys.toSeq.sorted
+    def schemas = names.map(n => n -> SilverTransforms.readSilver(spark, whFresh, n).schema).toMap
+    val before = schemas
+    assert(before.values.forall(_.nonEmpty))
+    SilverTransforms.refreshAll(spark, whFresh)
+    val after = schemas
+    for (n <- names) assert(before(n) == after(n), s"$n: ${before(n)} vs ${after(n)}")
   }
 
   /** Parquet data files under `dir`, at any depth (checksums excluded). */

@@ -64,9 +64,15 @@ class UtilSpec extends AnyFunSuite {
   test("PERMISSIVE audit read quarantines the malformed row instead of dropping it") {
     val src = TestSpark.tempDir("audit")
     Fixtures.writeStaticCsvs(src)
+    // one more input: a NULL_IF cell, which the bronze load reads as null
+    Files.writeString(Paths.get(src, "stop_times.txt"), "T5,NULL,13:00:00,S1,1,0,0\n",
+      java.nio.file.StandardOpenOption.APPEND)
     val (clean, corrupt) = BronzeIngest.readCsvAudited(spark, s"$src/stop_times.txt",
       Schemas.csvSchema(Schemas.bronze("stop_times_static")))
-    assert(clean.count() == 6)
+    assert(clean.count() == 7)
+    val t5 = clean.filter(org.apache.spark.sql.functions.col("trip_id") === "T5").collect()
+    assert(t5.length == 1 && t5.head.isNullAt(t5.head.fieldIndex("arrival_time")),
+      s"a literal NULL cell must read as null: ${t5.toSeq}")
     val bad = corrupt.collect().map(_.getString(0))
     assert(bad.toSeq == Seq("bad-row-too-few-columns,1"))
   }
