@@ -78,16 +78,19 @@ object BronzeIngest {
   /** PERMISSIVE audit variant of readCsv (SURVEY §4: the reference's
     * ON_ERROR='CONTINUE' silently loses malformed rows): bad rows land
     * in `_corrupt_record` for a quarantine sink instead of vanishing.
-    * Returns (clean, corrupt). The persist is required — Spark
-    * disallows filtering a CSV scan on the corrupt column alone.
+    * `use` gets (clean, corrupt) and its result is returned. The read is
+    * persisted while `use` runs — Spark disallows filtering a CSV scan
+    * on the corrupt column alone — and unpersisted when it returns or
+    * throws, so nothing stays cached after the call.
     */
-  def readCsvAudited(spark: SparkSession, path: String, schema: StructType)
-      : (DataFrame, DataFrame) = {
+  def readCsvAudited[A](spark: SparkSession, path: String, schema: StructType)
+                       (use: (DataFrame, DataFrame) => A): A = {
     val df = readCsvIn(spark, "PERMISSIVE", path,
       schema.add(corruptCol, StringType), None)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (df.filter(col(corruptCol).isNull).drop(corruptCol),
+    try use(df.filter(col(corruptCol).isNull).drop(corruptCol),
       df.filter(col(corruptCol).isNotNull).select(col(corruptCol)))
+    finally df.unpersist()
   }
 
   /** S8/A3 validation read (scripts/check_gtfs_static.py:8-20): every
@@ -116,6 +119,12 @@ object BronzeIngest {
     */
   val parquetCodec = "zstd"
 
+  /** Whether bronze parquet files carry dictionary pages: they do not.
+    * A bronze file holds one small load, so its dictionary pages cost
+    * more bytes than they save once zstd has compressed the plain pages.
+    */
+  val parquetDictionary = false
+
   /** Stamp the audit column and append to a bronze parquet table
     * (K3/D3). Partitioned by the DATE of insert_date: silver's
     * incremental filter (P5) then reads only new partitions. Sized by
@@ -127,6 +136,7 @@ object BronzeIngest {
       .withColumn("insert_day", to_date(col(Schemas.insertDateCol))))
       .write.mode("append")
       .option("compression", parquetCodec)
+      .option("parquet.enable.dictionary", parquetDictionary)
       .partitionBy("insert_day")
       .parquet(tablePath)
 

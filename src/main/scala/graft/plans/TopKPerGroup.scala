@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftglue.ColumnGlue
 import org.apache.spark.sql.types.LongType
@@ -82,11 +82,15 @@ private[plans] object TopKHeaps {
 
 /** Map-side partial top-k: emits each group's ≤ k best rows of this
   * partition, unranked. No required distribution — runs before the
-  * exchange and shrinks what the shuffle carries.
+  * exchange and shrinks what the shuffle carries. Rows stay in their
+  * partition, so its partitioning is its child's: over an input already
+  * clustered by the group key (one partition, say) the planner needs no
+  * exchange at all.
   */
 case class PartialTopKExec(grouping: Seq[Expression], order: Seq[SortOrder],
                            k: Int, child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     child.execute().mapPartitions({ iter =>
@@ -112,6 +116,7 @@ case class FinalTopKExec(grouping: Seq[Expression], order: Seq[SortOrder],
   override def producedAttributes: AttributeSet = AttributeSet(rankAttr :: Nil)
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(grouping) :: Nil
+  override def outputPartitioning: Partitioning = child.outputPartitioning
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val outAttrs = output

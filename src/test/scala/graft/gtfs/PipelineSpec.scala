@@ -111,7 +111,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("KPI: punctuality, distribution, top routes, top stops") {
-    val p = Kpi.punctualityRate(spine, 300L).collect().head
+    val p = Kpi.punctualityRate(spine).collect().head
     assert(p.getDouble(0) == 1.0 && p.getLong(1) == 5L)
 
     val dist = Kpi.delayDistribution(spine).collect()
@@ -181,21 +181,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(Kpi.delaySpine(absent, silver("stop_times_static_silver"), serviceDate).count() == 0L)
   }
 
-  test("spine-only panels read the built spine with no shuffle; a streaming spine stays lazy") {
-    val built = spine // built before the listener attaches: only the panels are measured
-    val stats = graft.Observability.attach(spark)
-    try {
-      // slidingAvgDelay is left out: its Expand reports unknown partitioning,
-      // so its aggregate shuffles whatever the spine's partitioning.
-      Seq(Kpi.avgDelayOverTime(built), Kpi.punctualityRate(built),
-        Kpi.punctualityOverTime(built), Kpi.delayHeatmap(built), Kpi.delayDistribution(built),
-        Kpi.travelTimeRealVsTheoretical(built), Kpi.delayEvolutionPerStop(built))
-        .foreach(_.collect())
-      val panels = stats.drain(spark)
-      assert(panels.size == 7 && panels.forall(_.shuffles == 0),
-        s"shuffles per panel: ${panels.map(_.shuffles)}")
-    } finally graft.Observability.remove(spark, stats)
-
+  test("a streaming spine stays a lazy stream-static plan") {
     // the source the silver path tails: bronze trip_stop_times through its transform
     val observedStream = SilverTransforms.tripStopTimes(spark.readStream
       .schema(BronzeIngest.diskSchema("trip_stop_times")).parquet(s"$wh/bronze/trip_stop_times"))
@@ -230,6 +216,26 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("bronze parquet files carry no dictionary pages and read back as loaded") {
+    val (src, _, _, whPlain) = stageFixtures()
+    BronzeIngest.loadStatic(spark, src, whPlain, ts1)
+    val conf = spark.sessionState.newHadoopConf()
+    for (name <- Seq("routes_static", "trips_static", "stops_static", "stop_times_static")) {
+      for (file <- parquetFiles(s"$whPlain/bronze/$name")) {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util
+          .HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toString), conf))
+        val chunks = try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala) finally reader.close()
+        assert(chunks.nonEmpty)
+        for (c <- chunks) assert(!c.hasDictionaryPage && !c.getEncodings.asScala.exists(_.usesDictionary),
+          s"$name ${c.getPath}: ${c.getEncodings}")
+      }
+      val loaded = BronzeIngest.readBronze(spark, s"$whPlain/bronze/$name", name).drop(Schemas.insertDateCol)
+      val read = BronzeIngest.readCsv(spark, s"$src/${name.stripSuffix("_static")}.txt",
+        Schemas.csvSchema(Schemas.bronze(name)))
+      assert(loaded.collect().map(_.toString).sorted.sameElements(read.collect().map(_.toString).sorted), name)
+    }
+  }
+
   /** Counts the Spark jobs `body` starts, through a SparkListener. */
   private def jobsOf(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -259,6 +265,71 @@ class PipelineSpec extends AnyFunSuite {
     assert(stored.map(_.getFileName.toString).toSet == Set(SilverTransforms.MarkFile) &&
       stored.map(_.getParent.getFileName.toString).sorted == SilverTransforms.transforms.keys.toSeq.sorted,
       s"silver stores $stored")
+  }
+
+  /** The 10 dashboard panels over one spine of `warehouse`, collected. */
+  private def refreshPanels(warehouse: String): Seq[Array[org.apache.spark.sql.Row]] = {
+    def view(name: String) = SilverTransforms.readSilver(spark, warehouse, name)
+    val spine = Kpi.delaySpine(view("trip_stop_times_silver"), view("stop_times_static_silver"), serviceDate)
+    Seq(Kpi.avgDelayOverTime(spine), Kpi.punctualityRate(spine),
+      Kpi.topDelayedRoutes(spine, view("trips_static_silver"), view("routes_static_silver")),
+      Kpi.topProblemStops(spine, view("stops_static_silver")), Kpi.delayHeatmap(spine),
+      Kpi.delayDistribution(spine), Kpi.travelTimeRealVsTheoretical(spine),
+      Kpi.latestVehiclePositions(view("vehicle_positions_silver")),
+      Kpi.stopsServiceState(spine, view("stops_static_silver")), Kpi.delayEvolutionPerStop(spine))
+      .map(_.collect())
+  }
+
+  test("ten panels over one spine run at most 2 Spark jobs with warm dimensions") {
+    val warm = refreshPanels(wh) // stores the schedule, trips, routes and stops
+    var again = Seq.empty[Array[org.apache.spark.sql.Row]]
+    // new views of the same silver tables: the stored dimensions still serve them
+    val jobs = jobsOf { again = refreshPanels(wh) }
+    assert(jobs <= 2, s"a warm refresh ran $jobs jobs: the rollup and vehicle_map only")
+    assert(again.map(_.toSeq) == warm.map(_.toSeq))
+  }
+
+  test("a moved silver watermark or a new input file reaches the next refresh") {
+    val (src, tuDir, vpDir, whNext) = stageFixtures()
+    BronzeIngest.loadStatic(spark, src, whNext, ts1)
+    BronzeIngest.loadRt(spark, tuDir, vpDir, whNext, ts2)
+    SilverTransforms.refreshAll(spark, whNext)
+    def view(name: String) = SilverTransforms.readSilver(spark, whNext, name)
+    def t2Stop1(): (Long, Long) = {
+      val spine = Kpi.delaySpine(view("trip_stop_times_silver"), view("stop_times_static_silver"), serviceDate)
+      val delay = spine.filter(col("trip_id") === "T2" && col("stop_sequence") === 1L)
+        .select("delay_s").collect().head.getLong(0)
+      val sched = Kpi.travelTimeRealVsTheoretical(spine).collect()
+        .find(_.getString(0) == "T2").get.getLong(2)
+      (delay, sched)
+    }
+    assert(t2Stop1() == ((60L, 600L)))
+    // the next day's schedule moves T2's first departure one minute later
+    val stopTimes = java.nio.file.Paths.get(s"$src/stop_times.txt")
+    java.nio.file.Files.writeString(stopTimes,
+      java.nio.file.Files.readString(stopTimes).replace("T2,,10:05:00", "T2,,10:06:00"))
+    BronzeIngest.loadStatic(spark, src, whNext, ts1.plusDays(1))
+    assert(t2Stop1() == ((60L, 600L)), "a load stays invisible until its refresh")
+    SilverTransforms.refreshAll(spark, whNext)
+    assert(t2Stop1() == ((0L, 540L)))
+
+    // a plain parquet dimension: a file appended under it shows on the next read
+    import spark.implicits._
+    val tripsDir = TestSpark.tempDir("kpi_trips")
+    Seq(("T2", "R1", ts1), ("T3", "R2", ts1)).toDF("trip_id", "route_id", Schemas.insertDateCol)
+      .write.mode("append").parquet(tripsDir)
+    def routesNow() = Kpi.topDelayedRoutes(
+        Kpi.delaySpine(view("trip_stop_times_silver"), view("stop_times_static_silver"), serviceDate),
+        spark.read.parquet(tripsDir), view("routes_static_silver"))
+      .collect().map(_.getString(0)).toSeq
+    assert(routesNow() == Seq("R2", "R1"))
+    Seq(("T2", "R3", ts2)).toDF("trip_id", "route_id", Schemas.insertDateCol)
+      .write.mode("append").parquet(tripsDir)
+    assert(routesNow() == Seq("R2", "R3"))
+
+    // another session gets its own dimension
+    val other = spark.newSession()
+    assert(Kpi.latestDim(other.read.parquet(tripsDir), "trip_id").sparkSession eq other)
   }
 
   test("the watermark only moves forward: a refresh over rows stamped below it changes nothing") {

@@ -67,14 +67,18 @@ class UtilSpec extends AnyFunSuite {
     // one more input: a NULL_IF cell, which the bronze load reads as null
     Files.writeString(Paths.get(src, "stop_times.txt"), "T5,NULL,13:00:00,S1,1,0,0\n",
       java.nio.file.StandardOpenOption.APPEND)
-    val (clean, corrupt) = BronzeIngest.readCsvAudited(spark, s"$src/stop_times.txt",
-      Schemas.csvSchema(Schemas.bronze("stop_times_static")))
-    assert(clean.count() == 7)
-    val t5 = clean.filter(org.apache.spark.sql.functions.col("trip_id") === "T5").collect()
-    assert(t5.length == 1 && t5.head.isNullAt(t5.head.fieldIndex("arrival_time")),
-      s"a literal NULL cell must read as null: ${t5.toSeq}")
-    val bad = corrupt.collect().map(_.getString(0))
-    assert(bad.toSeq == Seq("bad-row-too-few-columns,1"))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    BronzeIngest.readCsvAudited(spark, s"$src/stop_times.txt",
+        Schemas.csvSchema(Schemas.bronze("stop_times_static"))) { (clean, corrupt) =>
+      assert(clean.count() == 7)
+      val t5 = clean.filter(org.apache.spark.sql.functions.col("trip_id") === "T5").collect()
+      assert(t5.length == 1 && t5.head.isNullAt(t5.head.fieldIndex("arrival_time")),
+        s"a literal NULL cell must read as null: ${t5.toSeq}")
+      val bad = corrupt.collect().map(_.getString(0))
+      assert(bad.toSeq == Seq("bad-row-too-few-columns,1"))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,
+      "the audited read must not stay cached after the call")
   }
 
   test("S8/A3: all-string validation read and shape probe") {
